@@ -13,7 +13,7 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
-from big_data_analytics_spark.caching import register_cache
+from big_data_analytics_spark.caching import session_memo
 
 #: Tables generated by the driver at /root/testdata/sf*/ (TESTDATA.md).
 TPCH_TABLES = (
@@ -22,18 +22,6 @@ TPCH_TABLES = (
 )
 
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-
-#: Memoized LAZY reader DataFrames per (applicationId, sf_dir, table)
-#: — r15: building the scan costs ~150-250 ms per call on the bench
-#: box (driver-side footer read + schema inference + the NTZ
-#: normalization projection + py4j), paid by EVERY query invocation
-#: for EVERY table it reads. The DataFrame is an immutable lazy plan:
-#: memoizing it caches table METADATA (what a metastore/catalog holds
-#: at scale — Spark's own filesourcePartitionFileCacheSize is the same
-#: idea), never data or results; every action still scans the parquet.
-#: Registered in the session-cache registry so bench
-#: --isolate-families evicts it with every other fixture cache.
-_TABLE_CACHE: dict[tuple[str, str, str], DataFrame] = register_cache({})
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -44,30 +32,25 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     truncate to microsecond TimestampType — the same ns→us truncation
     DuckDB applies, so both engines see identical values.
     """
-    # id(spark) in the key: one SparkContext can host several
-    # SparkSessions (the driver harness builds its own), and a
-    # DataFrame executes under the conf of the session that CREATED
-    # it — an applicationId-only key could hand session B a plan bound
-    # to session A's conf (r15 ADVICE). The cached DataFrame holds a
-    # reference to its session, so id(spark) cannot be recycled while
-    # its entry is alive.
-    key = (spark.sparkContext.applicationId, id(spark), sf_dir, name)
-    hit = _TABLE_CACHE.get(key)
-    if hit is not None:
-        # re-apply the session pins on a hit: a caller may have
-        # changed the session zone between calls, and the pinned conf
-        # is part of this function's contract
-        spark.conf.set("spark.sql.session.timeZone", "UTC")
-        if name == "events":
-            spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        return hit
     # Timestamps in the fixtures are timezone-naive wall-clock values;
     # pin the session zone so results are identical under any caller's
     # SparkSession (the driver harness builds its own) and match the
-    # tz-naive DuckDB oracle.
+    # tz-naive DuckDB oracle. Pinned on every call, memo hit or not: a
+    # caller may have changed the zone since the scan was built.
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     if name == "events":
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    return _scan(spark, sf_dir, name)
+
+
+@session_memo
+def _scan(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    # Memoized: building the scan costs ~150-250 ms per call (driver-
+    # side footer read + schema inference + the NTZ normalization
+    # projection + py4j), paid by EVERY query for EVERY table it
+    # reads. The DataFrame is an immutable lazy plan: the memo holds
+    # table METADATA (what a metastore/catalog holds at scale), never
+    # data or results; every action still scans the parquet.
     df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
     if name == "events" and dict(df.dtypes).get("ts") == "bigint":
         from pyspark.sql import functions as F
@@ -82,7 +65,6 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     ntz_cols = [f for f, t in df.dtypes if t == "timestamp_ntz"]
     for c in ntz_cols:
         df = df.withColumn(c, df[c].cast("timestamp"))
-    _TABLE_CACHE[key] = df
     return df
 
 

@@ -39,50 +39,46 @@ from big_data_analytics_spark.pipelines import (
     top_products,
 )
 from big_data_analytics_spark.queries import query
-from big_data_analytics_spark.caching import register_cache
+from big_data_analytics_spark.caching import (
+    FIXTURE_ROOT,
+    derived_fixture,
+    session_memo,
+)
 
 _TABLES = ("categories", "products", "users", "sessions", "transactions")
-_FIXTURE_ROOT = Path(__file__).resolve().parents[2] / ".fixtures"
-
-_CACHE: dict[tuple, dict[str, DataFrame]] = register_cache({})
 
 
 def fixture_path(n_sessions: int) -> Path:
-    return _FIXTURE_ROOT / f"ecom_s{n_sessions}"
+    return FIXTURE_ROOT / f"ecom_s{n_sessions}"
 
 
 def _fixture(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
+    return _fixture_tables(spark, 500 if "0.001" in sf_dir else 2000)
+
+
+@session_memo
+def _fixture_tables(spark: SparkSession,
+                    n_sessions: int) -> dict[str, DataFrame]:
     """Parquet-backed fixture tables (generate once, then scan).
 
     Reading from Parquet (rather than re-evaluating the datagen
     expressions per query) both avoids recomputation and pins the
-    oracle inputs: DuckDB reads the identical files.
+    oracle inputs: DuckDB reads the identical files. ``_DONE`` records
+    the datagen arguments, so a change to them rebuilds the files.
     """
-    n_sessions = 500 if "0.001" in sf_dir else 2000
-    key = (id(spark), n_sessions)
-    if key not in _CACHE:
-        root = fixture_path(n_sessions)
-        if not (root / "_DONE").exists():
-            d = gen_all(spark, n_users=100, n_products=50,
-                        n_categories=5, n_sessions=n_sessions)
-            for name, df in d.items():
-                # single file per table: this is a committed test
-                # fixture (KB-scale), not an engine output path
-                df.repartition(1).write.mode("overwrite").parquet(
-                    str(root / name))
-            for crc in root.rglob("*.crc"):
-                crc.unlink()
-            (root / "_DONE").touch()
-        _CACHE[key] = {t: spark.read.parquet(str(root / t)) for t in _TABLES}
-    return _CACHE[key]
+    gen_args = dict(n_users=100, n_products=50, n_categories=5,
+                    n_sessions=n_sessions)
+    root = fixture_path(n_sessions)
 
+    def build() -> None:
+        for name, df in gen_all(spark, **gen_args).items():
+            # single file per table: a KB-scale test fixture, not an
+            # engine output path
+            df.repartition(1).write.mode("overwrite").parquet(
+                str(root / name))
 
-def clear_fixture_cache() -> None:
-    """Drop cached fixture frames (tests / long-lived drivers: the
-    cache is keyed by ``id(spark)`` and would otherwise grow across
-    sessions). Parquet files stay on disk; the next ``_fixture`` call
-    just re-opens them."""
-    _CACHE.clear()
+    derived_fixture(root, f"gen_all{sorted(gen_args.items())}", build)
+    return {t: spark.read.parquet(str(root / t)) for t in _TABLES}
 
 
 #: Oracle-side fixture location — the correctness scale (sf0.01 →

@@ -32,7 +32,7 @@ from big_data_analytics_spark.operators.graph import (
     pagerank,
 )
 from big_data_analytics_spark.queries import query
-from big_data_analytics_spark.caching import register_cache
+from big_data_analytics_spark.caching import session_memo
 
 _ITER = 5
 _TOPK = 20
@@ -174,57 +174,34 @@ def _edge_build_preflight(spark: SparkSession, li: DataFrame,
     return pairs
 
 
-#: One edge relation per (session, sf_dir), localCheckpoint-cached so
-#: gr1/lp1/gr2/gr3 share a single build instead of four. Keyed by
-#: applicationId so a new session never sees another session's blocks.
-_EDGE_CACHE: dict[tuple[str, str], DataFrame] = register_cache({})
-
-
+#: The memoized edge relation is shared by gr1/lp1/gr2/gr3: one
+#: localCheckpoint'd build instead of four.
+@session_memo
 def _weighted_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = (spark.sparkContext.applicationId, sf_dir)
-    df = _EDGE_CACHE.get(key)
-    if df is None:
-        li = load_table(spark, sf_dir, "lineitem").select(
-            "l_orderkey", "l_partkey")
-        _edge_build_preflight(spark, li)
-        df = _build_weighted_edges(li).localCheckpoint()
-        _EDGE_CACHE[key] = df
-    return df
+    li = load_table(spark, sf_dir, "lineitem").select(
+        "l_orderkey", "l_partkey")
+    _edge_build_preflight(spark, li)
+    return _build_weighted_edges(li).localCheckpoint()
 
 
-#: Session-cached derived side tables of the co-purchase graph (r15):
-#: the (node, wsum) flow-denominator relation per weighted flag plus
-#: the measured stats every graph query re-derived per call (edge
-#: count, node count, id range). Same lifetime/eviction contract as
-#: _EDGE_CACHE — at 100 TB these are the persisted companions of the
-#: edge table, not per-query work; bench --isolate-families evicts
-#: them so no reading depends on sibling order.
-_NODE_INFO_CACHE: dict[tuple, tuple[DataFrame, dict]] = register_cache({})
-
-
-#: Session-cached src-hash-partitioned copy of the distinct edge set
-#: (r15): the in-session realization of "pre-bucket the edges by src"
-#: that gr4/gr10's docstrings prescribe for 100 TB — .persist()
-#: (NOT localCheckpoint: a checkpoint scan forgets its partitioning)
-#: so every per-hop frontier join reuses the edge side's
-#: HashPartitioning and only the bounded frontier shuffles.
-_EDGE_BY_SRC_CACHE: dict[tuple[str, str], DataFrame] = register_cache({})
-
-
+@session_memo
 def _edges_by_src(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = (spark.sparkContext.applicationId, sf_dir)
-    df = _EDGE_BY_SRC_CACHE.get(key)
-    if df is None:
-        e = _weighted_edges(spark, sf_dir).select("src", "dst")
-        n_edges = _graph_inputs(spark, sf_dir, weighted=False)[1]["n_edges"]
-        para = spark.sparkContext.defaultParallelism
-        n_parts = int(max(para, n_edges * 16 // (64 << 20) + 1))
-        df = e.repartition(n_parts, "src").persist()
-        df.count()  # materialize so hop timings measure hops
-        _EDGE_BY_SRC_CACHE[key] = df
+    """src-hash-partitioned copy of the distinct edge set: the
+    in-session realization of "pre-bucket the edges by src" that
+    gr4/gr10's docstrings prescribe for 100 TB — .persist() (NOT
+    localCheckpoint: a checkpoint scan forgets its partitioning) so
+    every per-hop frontier join reuses the edge side's
+    HashPartitioning and only the bounded frontier shuffles."""
+    e = _weighted_edges(spark, sf_dir).select("src", "dst")
+    n_edges = _graph_inputs(spark, sf_dir, weighted=False)[1]["n_edges"]
+    para = spark.sparkContext.defaultParallelism
+    n_parts = int(max(para, n_edges * 16 // (64 << 20) + 1))
+    df = e.repartition(n_parts, "src").persist()
+    df.count()  # materialize so hop timings measure hops
     return df
 
 
+@session_memo
 def _graph_inputs(spark: SparkSession, sf_dir: str,
                   weighted: bool) -> tuple[DataFrame, dict]:
     """(node_info, stats) for the session edge relation: node_info is
@@ -236,54 +213,33 @@ def _graph_inputs(spark: SparkSession, sf_dir: str,
     the contract label_propagation's ``nodes`` parameter requires."""
     from big_data_analytics_spark.operators.graph import build_node_info
 
-    key = (spark.sparkContext.applicationId, sf_dir, weighted)
-    hit = _NODE_INFO_CACHE.get(key)
-    if hit is None:
-        e = _weighted_edges(spark, sf_dir)
-        if not weighted:
-            e = e.select("src", "dst")
-        ni = build_node_info(e, weighted).localCheckpoint()
-        row = ni.agg(F.count(F.lit(1)).alias("n"),
-                     F.min("node").alias("lo"),
-                     F.max("node").alias("hi")).first()
-        n_edges = e.count()  # cached-scan job
-        stats = {"n_edges": int(n_edges), "n_nodes": int(row["n"]),
-                 "min_node": int(row["lo"] or 0),
-                 "max_node": int(row["hi"] or 0)}
-        hit = (ni, stats)
-        _NODE_INFO_CACHE[key] = hit
-    return hit
+    e = _weighted_edges(spark, sf_dir)
+    if not weighted:
+        e = e.select("src", "dst")
+    ni = build_node_info(e, weighted).localCheckpoint()
+    row = ni.agg(F.count(F.lit(1)).alias("n"),
+                 F.min("node").alias("lo"),
+                 F.max("node").alias("hi")).first()
+    n_edges = e.count()  # cached-scan job
+    stats = {"n_edges": int(n_edges), "n_nodes": int(row["n"]),
+             "min_node": int(row["lo"] or 0),
+             "max_node": int(row["hi"] or 0)}
+    return ni, stats
 
 
-#: LPA community labels per (session, sf_dir) — the same derived-
-#: relation caching as _EDGE_CACHE one level up: communities are
-#: computed once and every consumer (gr6 modularity today; any future
-#: per-community rollup) pays only its marginal cost. lp1 itself does
-#: NOT read this cache — its graded/benched number must measure the
-#: LPA rounds, not a checkpoint scan.
-#: LIFETIME: entries are localCheckpoint'd DataFrames pinned in
-#: executor block storage with NO eviction (same property as
-#: _EDGE_CACHE) — bounded here because the harness sweeps a handful
-#: of sf_dirs per session and each label relation is node-sized. A
-#: long-lived service sweeping many datasets would need an
-#: unpersist-on-displacement policy; deliberately not added while the
-#: only callers are the bench/test/driver harnesses.
-_LABEL_CACHE: dict[tuple[str, str], DataFrame] = register_cache({})
-
-
+@session_memo
 def _lpa_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = (spark.sparkContext.applicationId, sf_dir)
-    df = _LABEL_CACHE.get(key)
-    if df is None:
-        edges = _weighted_edges(spark, sf_dir).select("src", "dst")
-        ni, st = _graph_inputs(spark, sf_dir, weighted=False)
-        df = label_propagation(
-            edges, iterations=_LPA_ITER, assume_distinct=True,
-            nodes=ni.select("node"),
-            node_stats=(st["n_nodes"], st["min_node"], st["max_node"]),
-            n_edges=st["n_edges"]).localCheckpoint()
-        _LABEL_CACHE[key] = df
-    return df
+    """LPA community labels, computed once so every consumer (gr6
+    modularity today) pays only its marginal cost. lp1 itself does
+    NOT read this memo — its graded/benched number must measure the
+    LPA rounds, not a checkpoint scan."""
+    edges = _weighted_edges(spark, sf_dir).select("src", "dst")
+    ni, st = _graph_inputs(spark, sf_dir, weighted=False)
+    return label_propagation(
+        edges, iterations=_LPA_ITER, assume_distinct=True,
+        nodes=ni.select("node"),
+        node_stats=(st["n_nodes"], st["min_node"], st["max_node"]),
+        n_edges=st["n_edges"]).localCheckpoint()
 
 
 def _sized_side(small: DataFrame, n_rows: int,

@@ -22,13 +22,13 @@ from pathlib import Path
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from big_data_analytics_spark.caching import (
+    FIXTURE_ROOT,
+    derived_fixture,
+    source_sig,
+)
 from big_data_analytics_spark.catalog import load_table
 from big_data_analytics_spark.queries import query
-from big_data_analytics_spark.queries.streaming_queries import (
-    _FIXTURE_ROOT,
-    _fixture_fresh,
-    _source_sig,
-)
 
 _N_BUCKETS = 8
 
@@ -52,18 +52,9 @@ def _bucketed_tables(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
     layout."""
     tag = _sf_tag(sf_dir)
     to, tc = f"bj1_orders_{tag}", f"bj1_customer_{tag}"
-    root = _FIXTURE_ROOT / f"bj1_bucketed_{tag}"
-    sig = (_source_sig(sf_dir, "orders") + "|"
-           + _source_sig(sf_dir, "customer"))
-    cat = spark.catalog
-    if (not (cat.tableExists(to) and cat.tableExists(tc))
-            or not _fixture_fresh(root, sig)):
-        # drop the pre-round-7 layout (tables written directly under
-        # bj1_orders_<tag>/bj1_customer_<tag>) so old checkouts don't
-        # leave orphan directories accumulating in .fixtures
-        import shutil
-        for legacy in (_FIXTURE_ROOT / to, _FIXTURE_ROOT / tc):
-            shutil.rmtree(legacy, ignore_errors=True)
+    root = FIXTURE_ROOT / f"bj1_bucketed_{tag}"
+
+    def build() -> None:
         orders = load_table(spark, sf_dir, "orders").select(
             "o_orderkey", "o_custkey", "o_totalprice")
         cust = load_table(spark, sf_dir, "customer").select(
@@ -76,8 +67,12 @@ def _bucketed_tables(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
          .option("path", str(root / "customer"))
          .bucketBy(_N_BUCKETS, "c_custkey").sortBy("c_custkey")
          .saveAsTable(tc))
-        root.mkdir(parents=True, exist_ok=True)
-        (root / "_DONE").write_text(sig)
+
+    cat = spark.catalog
+    derived_fixture(
+        root, source_sig(sf_dir, "orders") + "|"
+        + source_sig(sf_dir, "customer"), build,
+        force=not (cat.tableExists(to) and cat.tableExists(tc)))
     return to, tc
 
 
@@ -125,21 +120,13 @@ def _partitioned_events_dir(spark: SparkSession, sf_dir: str) -> Path:
     changes. Path-based parquet keeps partition discovery in the
     directory structure, so pruning works across sessions with no
     catalog."""
-    root = _FIXTURE_ROOT / f"events_partitioned_{Path(sf_dir).name}"
-    sig = _source_sig(sf_dir)
-    if not _fixture_fresh(root, sig):
-        if (root / "data").exists():
-            import shutil
-            shutil.rmtree(root / "data")
-        ev = load_table(spark, sf_dir, "events")
-        (ev.withColumn("d", F.to_date("ts"))
-         .repartition("d")
-         .write.mode("overwrite").partitionBy("d")
-         .parquet(str(root / "data")))
-        for crc in root.rglob("*.crc"):
-            crc.unlink()
-        (root / "_DONE").write_text(sig)
-    return root
+    root = FIXTURE_ROOT / f"events_partitioned_{Path(sf_dir).name}"
+    return derived_fixture(
+        root, source_sig(sf_dir),
+        lambda: load_table(spark, sf_dir, "events")
+        .withColumn("d", F.to_date("ts"))
+        .repartition("d")
+        .write.partitionBy("d").parquet(str(root / "data")))
 
 
 @query(
@@ -196,12 +183,9 @@ def _range_clustered_lineitem(spark: SparkSession, sf_dir: str) -> Path:
     data-skipping layout (Iceberg/Delta manifests, parquet footer
     stats) expressed with plain parquet. Built once per scale,
     rebuilt when the source testdata changes."""
-    root = _FIXTURE_ROOT / f"lineitem_rangeclustered_{Path(sf_dir).name}"
-    sig = _source_sig(sf_dir, "lineitem")  # the table this derives from
-    if not _fixture_fresh(root, sig):
-        if root.exists():
-            import shutil
-            shutil.rmtree(root)
+    root = FIXTURE_ROOT / f"lineitem_rangeclustered_{Path(sf_dir).name}"
+
+    def build() -> None:
         li = load_table(spark, sf_dir, "lineitem")
         (li.repartitionByRange(_N_SKIP_FILES, "l_shipdate")
          .sortWithinPartitions("l_shipdate")
@@ -212,10 +196,8 @@ def _range_clustered_lineitem(spark: SparkSession, sf_dir: str) -> Path:
                          F.max("l_shipdate").alias("max_ship")))
         manifest.coalesce(1).write.mode("overwrite").parquet(
             str(root / "manifest"))
-        for crc in root.rglob("*.crc"):
-            crc.unlink()
-        (root / "_DONE").write_text(sig)
-    return root
+
+    return derived_fixture(root, source_sig(sf_dir, "lineitem"), build)
 
 
 _SKIP_LO, _SKIP_HI = "1997-03-01", "1997-05-01"
@@ -287,10 +269,9 @@ def _partitioned_bucketed_events(spark: SparkSession, sf_dir: str) -> str:
     signature gating as _bucketed_tables."""
     tag = _sf_tag(sf_dir)
     tbl = f"bp1_events_{tag}"
-    root = _FIXTURE_ROOT / f"bp1_events_pb_{tag}"
-    sig = _source_sig(sf_dir)
-    cat = spark.catalog
-    if not cat.tableExists(tbl) or not _fixture_fresh(root, sig):
+    root = FIXTURE_ROOT / f"bp1_events_pb_{tag}"
+
+    def build() -> None:
         ev = load_table(spark, sf_dir, "events").select(
             "event_id", "ts", "user_id", "event_type", "value",
             F.to_date("ts").alias("d"))
@@ -300,8 +281,9 @@ def _partitioned_bucketed_events(spark: SparkSession, sf_dir: str) -> str:
          .partitionBy("d")
          .bucketBy(_N_BUCKETS, "user_id").sortBy("user_id")
          .saveAsTable(tbl))
-        root.mkdir(parents=True, exist_ok=True)
-        (root / "_DONE").write_text(sig)
+
+    derived_fixture(root, source_sig(sf_dir), build,
+                    force=not spark.catalog.tableExists(tbl))
     return tbl
 
 
@@ -359,21 +341,19 @@ def _compacted_events(spark: SparkSession, sf_dir: str) -> Path:
     COMPACTED directory — the graded query reads only it, so the
     oracle hash certifies the rewrite lost and altered nothing."""
     tag = _sf_tag(sf_dir)
-    root = _FIXTURE_ROOT / f"cm1_compaction_{tag}"
+    root = FIXTURE_ROOT / f"cm1_compaction_{tag}"
     small, compacted = root / "small", root / "compacted"
-    sig = _source_sig(sf_dir)
-    if not _fixture_fresh(root, sig):
-        import shutil
 
+    def build() -> None:
         from big_data_analytics_spark.sources.maintenance import (
             compact_parquet,
         )
-        shutil.rmtree(root, ignore_errors=True)
         ev = load_table(spark, sf_dir, "events")
         ev.repartition(64).write.mode("overwrite").parquet(str(small))
         compact_parquet(spark, str(small), target_file_bytes=32 << 20,
                         out_path=str(compacted))
-        (root / "_DONE").write_text(sig)
+
+    derived_fixture(root, source_sig(sf_dir), build)
     return compacted
 
 
@@ -429,12 +409,10 @@ def _evolved_events(spark: SparkSession, sf_dir: str) -> tuple[Path, Path]:
     models the only free kind of schema evolution — additive columns —
     where yesterday's files must stay readable without a rewrite."""
     tag = _sf_tag(sf_dir)
-    root = _FIXTURE_ROOT / f"se1_evolved_{tag}"
+    root = FIXTURE_ROOT / f"se1_evolved_{tag}"
     v1, v2 = root / "v1", root / "v2"
-    sig = _source_sig(sf_dir)
-    if not _fixture_fresh(root, sig):
-        import shutil
-        shutil.rmtree(root, ignore_errors=True)
+
+    def build() -> None:
         ev = load_table(spark, sf_dir, "events")
         (ev.where(F.col("event_id") % 2 == 0)
          .select("event_id", "ts", "user_id", "event_type")
@@ -442,7 +420,8 @@ def _evolved_events(spark: SparkSession, sf_dir: str) -> tuple[Path, Path]:
         (ev.where(F.col("event_id") % 2 == 1)
          .select("event_id", "ts", "user_id", "event_type", "value")
          .write.mode("overwrite").parquet(str(v2)))
-        (root / "_DONE").write_text(sig)
+
+    derived_fixture(root, source_sig(sf_dir), build)
     return v1, v2
 
 

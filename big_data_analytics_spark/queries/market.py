@@ -28,23 +28,41 @@ from pyspark.sql import functions as F
 from big_data_analytics_spark.catalog import load_table
 from big_data_analytics_spark.operators.joins import sized_side
 from big_data_analytics_spark.queries import query
-from big_data_analytics_spark.caching import register_cache
+from big_data_analytics_spark.caching import session_memo
 
 #: The distinct (basket, item) and (user, item, qty) relations feed
-#: 3-4 downstream consumers per query; cache one localCheckpoint per
-#: (session, sf_dir) — the graph-module pattern — instead of
-#: re-persisting a fresh DataFrame on every invocation (which would
-#: accumulate cache entries across repeated calls in a long session).
-_REL_CACHE: dict[tuple[str, str, str], "DataFrame"] = register_cache({})
+#: 3-4 downstream consumers per query: memoize one localCheckpoint
+#: instead of re-persisting a fresh DataFrame on every invocation
+#: (which would accumulate cache entries across repeated calls).
+@session_memo
+def _baskets(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return (load_table(spark, sf_dir, "lineitem")
+            .select("l_orderkey", "l_partkey").distinct()
+            .localCheckpoint())
 
 
-def _cached(spark: SparkSession, sf_dir: str, tag: str, build):
-    key = (spark.sparkContext.applicationId, sf_dir, tag)
-    df = _REL_CACHE.get(key)
-    if df is None:
-        df = build().localCheckpoint()
-        _REL_CACHE[key] = df
-    return df
+@session_memo
+def _ratings(spark: SparkSession, sf_dir: str) -> DataFrame:
+    li = load_table(spark, sf_dir, "lineitem").select(
+        "l_orderkey", "l_partkey",
+        F.col("l_quantity").cast("long").alias("q"))
+    o = load_table(spark, sf_dir, "orders").select(
+        F.col("o_orderkey").alias("l_orderkey"), "o_custkey")
+    ratings_all = (li.join(o, "l_orderkey")
+                   .groupBy(F.col("o_custkey").alias("u"),
+                            F.col("l_partkey").alias("i"))
+                   .agg(F.sum("q").alias("q")))
+    # Per-user top-20 item cap (the standard CF neighborhood bound):
+    # pair fan-out per user is <= C(20,2)=190 instead of quadratic in
+    # history length — the difference between a plan that survives
+    # power users at 100 TB and one that OOMs on them (measured: the
+    # uncapped self-join killed executors at sf0.1). WindowGroupLimit
+    # keeps the rank push-down cheap.
+    wu = Window.partitionBy("u").orderBy(F.desc("q"), "i")
+    return (ratings_all
+            .withColumn("rn", F.row_number().over(wu))
+            .filter(F.col("rn") <= 20).drop("rn")
+            .localCheckpoint())
 
 
 @query(
@@ -103,10 +121,7 @@ def mb1_association_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     counts on the part table's metadata count — broadcast below the
     5M ceiling (today's plan, unchanged), co-partitioned sort-merge
     past it (the documented shape)."""
-    baskets = _cached(
-        spark, sf_dir, "baskets",
-        lambda: load_table(spark, sf_dir, "lineitem")
-        .select("l_orderkey", "l_partkey").distinct())
+    baskets = _baskets(spark, sf_dir)
     n_baskets = baskets.count()  # cheap: checkpoint-materialized
     n_parts = load_table(spark, sf_dir, "part").count()  # metadata
     tot = baskets.agg(
@@ -198,28 +213,7 @@ def cf1_item_item_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     item pair gives a strict, engine-portable total order."""
     dec = "decimal(38,0)"
 
-    def _build_ratings() -> DataFrame:
-        li = load_table(spark, sf_dir, "lineitem").select(
-            "l_orderkey", "l_partkey",
-            F.col("l_quantity").cast("long").alias("q"))
-        o = load_table(spark, sf_dir, "orders").select(
-            F.col("o_orderkey").alias("l_orderkey"), "o_custkey")
-        ratings_all = (li.join(o, "l_orderkey")
-                       .groupBy(F.col("o_custkey").alias("u"),
-                                F.col("l_partkey").alias("i"))
-                       .agg(F.sum("q").alias("q")))
-        # Per-user top-20 item cap (the standard CF neighborhood
-        # bound): pair fan-out per user is <= C(20,2)=190 instead of
-        # quadratic in history length — the difference between a plan
-        # that survives power users at 100 TB and one that OOMs on
-        # them (measured: the uncapped self-join killed executors at
-        # sf0.1). WindowGroupLimit keeps the rank push-down cheap.
-        wu = Window.partitionBy("u").orderBy(F.desc("q"), "i")
-        return (ratings_all
-                .withColumn("rn", F.row_number().over(wu))
-                .filter(F.col("rn") <= 20).drop("rn"))
-
-    ratings = _cached(spark, sf_dir, "ratings", _build_ratings)
+    ratings = _ratings(spark, sf_dir)
     norms = ratings.groupBy("i").agg(
         F.sum((F.col("q") * F.col("q")).cast(dec)).alias("n2"))
     # struct field order (i, q) makes sort_array order by item id, so

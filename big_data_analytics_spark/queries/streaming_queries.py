@@ -29,6 +29,11 @@ from pathlib import Path
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from big_data_analytics_spark.caching import (
+    FIXTURE_ROOT,
+    derived_fixture,
+    source_sig,
+)
 from big_data_analytics_spark.catalog import load_table
 from big_data_analytics_spark.operators.joins import sized_side
 from big_data_analytics_spark.queries import query
@@ -40,7 +45,6 @@ from big_data_analytics_spark.streaming.events import (
     view_purchase_interval_join,
 )
 
-_FIXTURE_ROOT = Path(__file__).resolve().parents[2] / ".fixtures"
 _QNAME = itertools.count()
 
 
@@ -57,7 +61,7 @@ def _scratch(name: str, *subdirs: str) -> tuple[Path, ...]:
     is exactly what wipe-on-entry (not on-exit) provides."""
     import shutil
 
-    root = _FIXTURE_ROOT / "scratch" / name
+    root = FIXTURE_ROOT / "scratch" / name
     if root.exists():
         shutil.rmtree(root)
     out = tuple(root / s for s in subdirs)
@@ -66,41 +70,17 @@ def _scratch(name: str, *subdirs: str) -> tuple[Path, ...]:
     return out
 
 
-def _source_sig(sf_dir: str, table: str = "events") -> str:
-    """Content signature of a source table: (size, mtime_ns) of every
-    file under <table>.parquet. Derived fixtures (stream splits,
-    partitioned/bucketed/range-clustered rewrites) are gated on the
-    signature of the table they were derived FROM — if the driver
-    regenerates the testdata between rounds, a fixture gated only on
-    its own existence would silently serve STALE rows and every
-    oracle comparison through it would be wrong. Stored inside
-    _DONE; any difference forces a rebuild."""
-    src = Path(sf_dir) / f"{table}.parquet"
-    parts = sorted(src.rglob("*")) if src.is_dir() else [src]
-    return ";".join(f"{p.name}:{p.stat().st_size}:{p.stat().st_mtime_ns}"
-                    for p in parts if p.is_file())
-
-
-def _fixture_fresh(root: Path, sig: str) -> bool:
-    done = root / "_DONE"
-    return done.exists() and done.read_text() == sig
-
-
 def _events_stream_dir(spark: SparkSession, sf_dir: str) -> Path:
     """A multi-file Parquet copy of the (normalized) events table —
     the replayable file-source directory. Built once per scale (and
     rebuilt whenever the source testdata changes — _DONE records the
     source signature); the 4-way split makes maxFilesPerTrigger=1
     produce 4 real micro-batches instead of one."""
-    root = _FIXTURE_ROOT / f"events_stream_{Path(sf_dir).name}"
-    sig = _source_sig(sf_dir)
-    if not _fixture_fresh(root, sig):
-        ev = load_table(spark, sf_dir, "events")
-        ev.repartition(4).write.mode("overwrite").parquet(str(root / "data"))
-        for crc in root.rglob("*.crc"):
-            crc.unlink()
-        (root / "_DONE").write_text(sig)
-    return root
+    root = FIXTURE_ROOT / f"events_stream_{Path(sf_dir).name}"
+    return derived_fixture(
+        root, source_sig(sf_dir),
+        lambda: load_table(spark, sf_dir, "events").repartition(4)
+        .write.parquet(str(root / "data")))
 
 
 def _events_stream_dir_ordered(spark: SparkSession, sf_dir: str,
@@ -119,13 +99,10 @@ def _events_stream_dir_ordered(spark: SparkSession, sf_dir: str,
     event exactly twice) — the at-least-once redelivery fixture for
     the streaming dedup query."""
     tag = f"events_stream_ordered{'_x2' if copies == 2 else ''}"
-    root = _FIXTURE_ROOT / f"{tag}_{Path(sf_dir).name}"
+    root = FIXTURE_ROOT / f"{tag}_{Path(sf_dir).name}"
     data = root / "data"
-    sig = _source_sig(sf_dir)
-    if not _fixture_fresh(root, sig):
-        if data.exists():
-            import shutil
-            shutil.rmtree(data)
+
+    def build() -> None:
         ev = load_table(spark, sf_dir, "events")
         b = ev.agg(F.min("ts").alias("lo"), F.max("ts").alias("hi")
                    ).collect()[0]
@@ -145,10 +122,8 @@ def _events_stream_dir_ordered(spark: SparkSession, sf_dir: str,
                     os.utime(f, (base + step, base + step))
                 seen = now
                 step += 1
-        for crc in root.rglob("*.crc"):
-            crc.unlink()
-        (root / "_DONE").write_text(sig)
-    return root
+
+    return derived_fixture(root, source_sig(sf_dir), build)
 
 
 #: Streaming state partition count for the graded fixtures. The
@@ -757,13 +732,10 @@ def _events_stream_dir_redelivery(spark: SparkSession, sf_dir: str) -> Path:
     rows still inside the watermark -> accepted, double-counted;
     the rest dropped), and the third copy arrives after Q4 pushed
     the watermark far past Q2 (every row dropped)."""
-    root = _FIXTURE_ROOT / f"events_stream_redelivery_{Path(sf_dir).name}"
+    root = FIXTURE_ROOT / f"events_stream_redelivery_{Path(sf_dir).name}"
     data = root / "data"
-    sig = _source_sig(sf_dir)
-    if not _fixture_fresh(root, sig):
-        if data.exists():
-            import shutil
-            shutil.rmtree(data)
+
+    def build() -> None:
         ev = load_table(spark, sf_dir, "events")
         b = ev.agg(F.min(F.unix_micros("ts")).alias("lo"),
                    F.max(F.unix_micros("ts")).alias("hi")).collect()[0]
@@ -779,10 +751,8 @@ def _events_stream_dir_redelivery(spark: SparkSession, sf_dir: str) -> Path:
             for f in now - seen:
                 os.utime(f, (base + step, base + step))
             seen = now
-        for crc in root.rglob("*.crc"):
-            crc.unlink()
-        (root / "_DONE").write_text(sig)
-    return root
+
+    return derived_fixture(root, source_sig(sf_dir), build)
 
 
 def _sm9_run(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1182,8 +1152,7 @@ def sm14_stream_user_totals_rocksdb(spark: SparkSession,
     executor deployment hold per-user state for ~1e9 users (state
     size bounded by local disk, not heap) and is the provider every
     large Structured Streaming deployment actually runs. Both sides
-    of the trade are MEASURED (SCALE.md r14 + r15,
-    tools/state_explosion_ab.py): below heap-scale state RocksDB is
+    of the trade are MEASURED (SCALE.md r14 + r15): below heap-scale state RocksDB is
     pure commit overhead; at 16M keys on a 2g heap the HDFS
     provider's in-heap state map OOMs the stream while RocksDB
     completes the identical aggregation — the crossover this row

@@ -1,0 +1,148 @@
+"""Session-memo contract (big_data_analytics_spark/caching.py).
+
+Every session-bound relation is memoized through ``session_memo``:
+two SparkSessions on one SparkContext each get frames bound to
+themselves, eviction releases persisted blocks wherever a value
+nests them, and positional/keyword calls share one entry.
+"""
+
+from __future__ import annotations
+
+import importlib
+from pathlib import Path
+
+import pytest
+from pyspark import StorageLevel
+from pyspark.sql import DataFrame
+
+import big_data_analytics_spark
+from big_data_analytics_spark import caching
+from tests.conftest import SF_SMOKE
+
+#: (module under the package, memoized function, args after sf_dir)
+MEMOS = [
+    ("catalog", "load_table", ("orders",)),
+    ("queries.ecommerce_shaped", "_fixture", ()),
+    ("queries.market", "_baskets", ()),
+    ("queries.market", "_ratings", ()),
+    ("queries.dedup_queries", "_lsh_index", ()),
+    ("queries.similarity", "_ivf_assigned", ()),
+    ("queries.graph_queries", "_weighted_edges", ()),
+    ("queries.graph_queries", "_graph_inputs", (False,)),
+    ("queries.graph_queries", "_edges_by_src", ()),
+    ("queries.graph_queries", "_lpa_labels", ()),
+]
+
+
+def _frame(value) -> DataFrame:
+    """The first DataFrame of a memoized value (a frame, a dict of
+    frames, or a tuple holding one)."""
+    if isinstance(value, DataFrame):
+        return value
+    if isinstance(value, dict):
+        value = list(value.values())
+    return next(v for v in value if isinstance(v, DataFrame))
+
+
+@pytest.fixture(scope="module")
+def other(spark):
+    """A second session on the shared SparkContext."""
+    session = spark.newSession()
+    yield session
+    caching.evict_all()  # drop the entries pinning this session
+
+
+@pytest.mark.parametrize("module,name,args", MEMOS,
+                         ids=[name for _, name, _ in MEMOS])
+def test_memo_returns_frames_of_the_calling_session(spark, other, module,
+                                                    name, args):
+    fn = getattr(importlib.import_module(
+        f"big_data_analytics_spark.{module}"), name)
+    for session in (spark, other):
+        assert _frame(fn(session, SF_SMOKE, *args)).sparkSession is session
+
+
+def _released(df: DataFrame) -> bool:
+    return df.storageLevel == StorageLevel.NONE
+
+
+def test_evict_all_unpersists_nested_values(other):
+    from big_data_analytics_spark.queries.graph_queries import _edges_by_src
+
+    @caching.session_memo
+    def persisted_dict(spark):
+        return {"t": spark.range(3).persist()}
+
+    by_src = _edges_by_src(other, SF_SMOKE)
+    held = persisted_dict(other)["t"]
+    assert not _released(by_src) and not _released(held)
+    n = sum(len(c) for c in caching._REGISTRY)
+    assert caching.evict_all() == n
+    assert _released(by_src) and _released(held)
+    assert not any(caching._REGISTRY)
+
+
+def test_load_table_hit_repins_utc(spark):
+    from big_data_analytics_spark.catalog import load_table
+
+    first = load_table(spark, SF_SMOKE, "orders")
+    spark.conf.set("spark.sql.session.timeZone", "America/New_York")
+    try:
+        assert load_table(spark, SF_SMOKE, "orders") is first
+        assert spark.conf.get("spark.sql.session.timeZone") == "UTC"
+    finally:
+        spark.conf.set("spark.sql.session.timeZone", "UTC")
+
+
+def test_positional_and_keyword_calls_share_one_entry(spark):
+    from big_data_analytics_spark.queries.graph_queries import _graph_inputs
+
+    builds = []
+
+    @caching.session_memo
+    def f(spark, sf_dir, weighted=False):
+        builds.append((sf_dir, weighted))
+        return object()
+
+    hits = {id(f(spark, "x")), id(f(spark, "x", False)),
+            id(f(spark, "x", weighted=False)),
+            id(f(spark, sf_dir="x", weighted=False))}
+    assert len(hits) == 1 and builds == [("x", False)]
+    assert (_graph_inputs(spark, SF_SMOKE, False)
+            is _graph_inputs(spark, SF_SMOKE, weighted=False))
+
+
+def test_one_way_to_memoize_a_session_relation():
+    from big_data_analytics_spark.queries import ecommerce_shaped
+
+    pkg = Path(big_data_analytics_spark.__file__).parent
+    registrations = []
+    for path in sorted(pkg.rglob("*.py")):
+        if path == pkg / "caching.py":
+            continue
+        text = path.read_text()
+        assert "applicationId" not in text, path
+        registrations += [line.strip() for line in text.splitlines()
+                          if "register_cache(" in line]
+    assert len(registrations) == 1
+    assert registrations[0].startswith("_BUCKETS_EXPR_CACHE")
+    assert not hasattr(ecommerce_shaped, "clear_fixture_cache")
+
+
+def test_derived_fixture_rebuilds_only_on_a_new_signature(tmp_path):
+    root = tmp_path / "fx"
+    builds = []
+
+    def build():
+        builds.append(1)
+        (root / "data").mkdir(parents=True)
+        (root / "data" / "part.crc").write_text("")
+
+    caching.derived_fixture(root, "v1", build)
+    assert (root / "_DONE").read_text() == "v1"
+    assert not (root / "data" / "part.crc").exists()
+    caching.derived_fixture(root, "v1", build)
+    assert len(builds) == 1
+    caching.derived_fixture(root, "v2", build)  # wipes, then rebuilds
+    caching.derived_fixture(root, "v2", build, force=True)
+    assert len(builds) == 3 and (root / "_DONE").read_text() == "v2"

@@ -458,8 +458,8 @@ def test_sm14_rocksdb_matches_sm6_and_writes_rocksdb_state(spark):
     this inspects the checkpoint's state directory for RocksDB
     artifacts (changelog/zip snapshots), which the default provider
     never writes (it writes .delta/.snapshot files)."""
+    from big_data_analytics_spark.caching import FIXTURE_ROOT
     from big_data_analytics_spark.queries.streaming_queries import (
-        _FIXTURE_ROOT,
         sm6_stream_stateful_user_totals,
         sm14_stream_user_totals_rocksdb,
     )
@@ -470,7 +470,7 @@ def test_sm14_rocksdb_matches_sm6_and_writes_rocksdb_state(spark):
     assert hdfs.exceptAll(rocks).count() == 0
     assert rocks.count() > 0
 
-    state = _FIXTURE_ROOT / "scratch" / "sm14_mem_mem" / "ckpt" / "state"
+    state = FIXTURE_ROOT / "scratch" / "sm14_mem_mem" / "ckpt" / "state"
     assert state.exists(), "sm14 checkpoint state dir missing"
     arts = [p.name for p in state.rglob("*")
             if p.suffix in (".zip", ".changelog")]
