@@ -67,18 +67,3 @@ def scaled_sum(col: Column | str, scale: int) -> Column:
     """Exact SUM at an arbitrary fixed-point scale → DOUBLE."""
     return F.sum(scaled_int(col, scale)).cast("double") / F.lit(float(scale))
 
-
-# ---------------------------------------------------------------------
-# DuckDB-oracle SQL fragments matching the above bit-for-bit.
-# ---------------------------------------------------------------------
-
-def oracle_cents(expr: str, scale: int = 100) -> str:
-    return f"CAST(FLOOR(({expr}) * {scale}.0 + 0.5) AS BIGINT)"
-
-
-def oracle_money_sum(expr: str, scale: int = 100) -> str:
-    return f"CAST(SUM({oracle_cents(expr, scale)}) AS DOUBLE) / {scale}.0"
-
-
-def oracle_money_avg(expr: str, scale: int = 100) -> str:
-    return f"{oracle_money_sum(expr, scale)} / COUNT({expr})"

@@ -5,7 +5,7 @@ spec) plans as ``Exchange SinglePartition`` — every row flows through
 ONE task, the canonical scale-killer once the windowed relation is
 unbounded (documents, customers, session endpoints). These helpers
 compute the same *exact* answers with the two-level shape already used
-by t9 sequence packing (queries/text2.py) and the gap-fill timeseries
+by t9 sequence packing (queries/text.py) and the gap-fill timeseries
 operators:
 
 1. assign every row to one of ``num_buckets`` value-range buckets that

@@ -42,10 +42,13 @@ def query(name: str, oracle: Optional[str] = None):
 #: one, or changing a shared helper it calls — run that module's full
 #: oracle gate, not just the new query's test:
 #:     pytest tests/test_queries_vs_duckdb.py -k <module-stem> -q
-#: (~1 min/module). A new query exercised only by its own ``-k name``
-#: run can still break a sibling in the same module (the mm9 commit
-#: rebound mm2's module constant: oracle f-strings bind constants at
-#: decoration time, bodies read them at call time — see
+#: (~1 min/module). Every gate item carries its query's defining-module
+#: stem as a keyword (tests/conftest.py), so this selects the module's
+#: whole family, plus any query whose name contains the stem. A new
+#: query exercised only by its own ``-k name`` run can still break a
+#: sibling in the same module (the mm9 commit rebound mm2's module
+#: constant: oracle f-strings bind constants at decoration time,
+#: bodies read them at call time — see
 #: tests/test_module_constant_guard.py). Shared-helper edits gate
 #: every consumer module.
 #: ADDITIONALLY (round-11 lesson, the gr9/README incident): any commit
@@ -103,80 +106,8 @@ def query(name: str, oracle: Optional[str] = None):
 #: registry order, skipping the four declared no-oracle queries
 #: (d2/d3/p19/f17 — each already has a green graded deterministic
 #: twin; a head slot on a rows-only check refreshes nothing).
-#: Round-13 head-50 (THE BACKLOG-BURN ROUND, per VERDICT r12 task 1)
-#: was: 2 canaries + 3 new (gov3, t19, t20) + 2 changed (fs2, dq5 —
-#: the two r12 ADVICE items) + all 7 r3-vintage rows + all 5
-#: pin-only re-grades + 31 of the 34 r4-vintage rows (t13/x11/x12
-#: displaced by the three new queries). All 50 came back green
-#: (CORRECTNESS_r13), leaving oldest vintage r4 (3 rows) then r5
-#: (36 rows).
-#:
-#: Round-14 head-50 (FINISH THE ROTATION, per VERDICT r13 task 1):
-#: 2 canaries + 2 new (sm14 — the RocksDB state-store swap, task 8;
-#: gov4 — the geometric-mechanism DP count release completing the
-#: governance ladder, additions held at 2 of the allowed 3)
-#: + 4 changed (gov3's 128-bit divisor/term promotion and fs2/ev3's
-#: migration onto the shared spread_if_undersplit helper — both
-#: plan-identical, graded as insurance; sm6's body extraction into
-#: the sm6/sm14-shared _user_totals_stream — sm6 is also r7-vintage,
-#: so its re-grade doubles as rotation) + the LAST 3 r4-vintage rows
-#: (t13, x11, x12) + ALL 36 r5-vintage rows (the ml5-ml22 cohort) +
-#: 3 r7 rows oldest-first in registry order (w10, w14, f1 — f8
-#: yields its fill slot to gov4 and leads the r15 fill).
-#: t19/t20's round-14 edits are docstring-only (the ADVICE 1-ulp
-#: hedge) and the other spread-helper consumers (t18, es1/d10, gm1,
-#: z2, v11, ev1/ev2/ev4, dq4-class, d3b-class) changed by the same
-#: plan-identical extraction, verified by the module oracle gates +
-#: the RoundRobinPartitioning plan guards — not re-graded beyond the
-#: fs2/ev3 representatives and the cohort members already in this
-#: head (gm1, d8). After this round the oldest vintage is r7.
-#:
-#: Round-15 head-50 (RETIRE r7, per VERDICT r14 tasks 1/6/7):
-#: 2 canaries + 0 new (additions held at zero — the 35-row r7
-#: cohort plus two changed rows fills the head; r8's 37 rows are
-#: next, so spending slots on additions now would push the r8
-#: retirement past r16) + 2 changed (t20 — the graded PMI hash
-#: column moved to exact integer cross-multiplication per VERDICT
-#: task 8, closing its data-dependent-ln residual; gr1 — the graph
-#: edge-build path gained the heap pre-flight guard per task 4,
-#: plan-identical, graded as the representative for every
-#: graph-iterator consumer) + ALL 35 r7-vintage rows (f8 leads, as
-#: promised in the r14 note) + 11 r8 rows: the first 10 oldest-first
-#: in registry order (d1, t1–t5, v1, v2, v3_ivf, v3_lsh) plus bj1
-#: out of order per VERDICT task 6 — the storage-layout trio
-#: (bj1/pr1/dsk1) carries the engine's strongest physical-plan
-#: claims and pr1/dsk1 are already in the r7 cohort, so bj1 rides
-#: along to re-grade all three together. After this round the
-#: oldest vintage is r8 (26 rows), then r9 (33).
-#:
-#: Round-16 head-50 (RETIRE r8 + GRADE THE r15 SLIP, per VERDICT r15
-#: tasks 3 and "what's wrong" #5): 2 canaries + the 9 r15-changed
-#: rows given rule-(b) slots (lp1, ml5, d8, cf1, ts2, v1, ev1, ev2,
-#: ev4 — seven of them missed the r15 head because it was pinned
-#: before the optimization commits landed; cf1 and v1 were already in
-#: it and are re-graded as insurance; gr5/gr4/v7 are also r15-changed
-#: but ride in the r8 cohort below) + ALL 26 r8-vintage rows
-#: (registry order) + 13 r9 rows oldest-first in registry order.
-#: Queries changed during round 16 displace the r9 fill tail (rule
-#: b) — the head is re-checked at round end against the round's diff,
-#: the r15 lesson. After this round the oldest vintage is r9 (20
-#: rows), then r11.
-#:
-#: Round-17 head-50 (RETIRE r9 + GRADE THE session_memo CHANGE):
-#: 2 canaries + 7 changed rows — the queries whose bodies or memoized
-#: helpers moved onto caching.session_memo / derived_fixture: v3_lsh
-#: and v3_ivf (the LSH and IVF index memos), mb1 and cf1 (the basket
-#: and rating memos), sm14 (representing the streaming stream-split
-#: fixtures, whose sm10/sm11 consumers are also in the r9 cohort), gr1
-#: (representing the graph memos, as in r15; gr6 reads the label memo
-#: and is r9) and bj1 (representing the layout fixture gate, as in
-#: r15) + ALL 19 r9-vintage rows (registry order) + the first 22 r11
-#: rows oldest-first in registry order (v9 .. q2p), which include the
-#: ecommerce_shaped fixture consumers ecom_revenue_by_state/top_products/
-#: inventory_levels, so those slots double as rule-(b) rows. The
-#: catalog.load_table edit is shared and plan-identical, covered by
-#: the oracle gate as the r14 note covers shared-helper extractions.
-#: After this round the oldest vintage is r11 (21 rows).
+#: Each round's cohort and its reasons are recorded in git history,
+#: VERDICT.md and CHANGES.md.
 GRADE_HEAD = [
     # (a) standing canaries — driver-green every round since r1
     "a1_pricing_summary",
@@ -248,29 +179,20 @@ def load_all() -> dict[str, Query]:
         dedup_queries,
         temporal,
         sampling,
-        scalar_funcs2,
-        tpch_extra2,
-        windows2,
-        funcs2,
         sketches,
-        text2,
         scalar_funcs,
         relational,
         windows,
-        relational2,
         tpch_extra,
-        tpch_extra3,
         timeseries_queries,
         quality,
         reshape,
         funnels,
-        sampling2,
         cleaning,
         fuzzy,
         cdc,
         graph_queries,
         robust,
-        text3,
         multimodal_queries,
         zorder_queries,
         mixing,
@@ -280,11 +202,7 @@ def load_all() -> dict[str, Query]:
         clustering_queries,
         streaming_queries,
         market,
-        timeseries2,
         stats_ext,
-        text4,
-        text5,
-        text6,
         layout,
         udf_queries,
         ml_queries,

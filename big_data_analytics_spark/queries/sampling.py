@@ -1,6 +1,7 @@
-"""P19 deterministic variant — hash-based train/test split.
+"""Deterministic sampling: a hash-based train/test split (the P19
+variant) and hash-seeded weighted sampling.
 
-``p19_sample_and_split`` (relational2.py) exercises Spark's seeded
+``p19_sample_and_split`` (relational.py) exercises Spark's seeded
 RNG sampling, which no other engine can reproduce, so the driver can
 only rows-check it. This module adds the production alternative: a
 *content-addressed* split, where the bucket is a pure function of the
@@ -21,16 +22,28 @@ keys land in [0, buckets) like any other key; for non-negative keys
 pmod and ``%`` agree, which keeps the oracle SQL (positive TPC-H keys)
 on plain ``%``. A portable oracle for signed keys is
 ``((key*2654435761) % 2147483648 + 2147483648) % 2147483648 % buckets``.
+
+Weighted sampling (ws1, ws2) is Efraimidis–Spirakis (A-ES) reservoir
+sampling as a distributed top-k, with hash-derived randomness so the
+sample is deterministic and engine-reproducible (the data-mixing
+primitive of a training pipeline: sample documents proportional to a
+quality/length weight). A-ES: draw u_i ~ U(0,1), key_i = u_i^(1/w_i);
+the k largest keys are a weighted sample without replacement.
+Monotone-equivalently order by ln(u_i)/w_i, skipping the pow. With u_i
+derived from a multiplicative hash of the row id, both engines compute
+identical keys, and Spark plans the selection as TakeOrderedAndProject
+— per-partition top-k, no global sort, no RNG state.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from big_data_analytics_spark.catalog import load_table
 from big_data_analytics_spark.functions.money import money_sum
 from big_data_analytics_spark.queries import query
+
 
 KNUTH = 2654435761
 MOD = 2147483648  # 2^31
@@ -128,4 +141,66 @@ def p19b_hash_split(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count(F.lit(1)).alias("n"),
              money_sum("o_totalprice").alias("revenue"))
         .orderBy("split")
+    )
+
+
+@query(
+    "ws1_weighted_doc_sample",
+    oracle=f"""
+    SELECT doc_id, n_chars
+    FROM documents
+    ORDER BY ln(((doc_id * {KNUTH}) % {MOD} + 1.0) / {MOD + 1}.0)
+             / n_chars DESC, doc_id
+    LIMIT 25
+    """,
+)
+def ws1_weighted_doc_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """25 documents sampled without replacement with probability
+    proportional to length (A-ES keys from hash-uniform u). The key is
+    only an ordering device — it is not emitted, so a last-ulp ln()
+    divergence between engines cannot affect the value hash unless two
+    keys collide to within an ulp (measure-zero for continuous
+    weights)."""
+    d = load_table(spark, sf_dir, "documents")
+    u = ((F.col("doc_id") * F.lit(KNUTH)) % F.lit(MOD) + F.lit(1.0)) \
+        / F.lit(float(MOD + 1))
+    es_key = F.log(u) / F.col("n_chars")
+    return (
+        d.select("doc_id", "n_chars", es_key.alias("__k"))
+        .orderBy(F.desc("__k"), F.asc("doc_id"))
+        .limit(25)
+        .select("doc_id", "n_chars")
+    )
+
+
+@query(
+    "ws2_reservoir_per_group",
+    oracle="""
+    SELECT event_type, event_id, user_id
+    FROM (
+        SELECT event_type, event_id, user_id,
+               ROW_NUMBER() OVER (
+                   PARTITION BY event_type
+                   ORDER BY (event_id * 2654435761) % 2147483648,
+                            event_id) AS rn
+        FROM events
+    ) WHERE rn <= 3
+    """,
+)
+def ws2_reservoir_per_group(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Deterministic k-per-group 'reservoir': order each group by a
+    multiplicative hash of the row key and keep the first k — the
+    uniform-without-replacement sample a random reservoir gives, but
+    reproducible across engines, partitionings, and reruns (the
+    p19b/ws1 determinism discipline applied to per-group sampling).
+    Plans through WindowGroupLimit: only ~k rows per group survive
+    each partial sort, so the shuffle carries samples, not groups."""
+    ev = load_table(spark, sf_dir, "events")
+    h = F.pmod(F.col("event_id") * F.lit(KNUTH), F.lit(MOD))
+    w = Window.partitionBy("event_type").orderBy(h, F.col("event_id"))
+    return (
+        ev.select("event_type", "event_id", "user_id",
+                  F.row_number().over(w).alias("rn"))
+        .where(F.col("rn") <= 3)
+        .drop("rn")
     )

@@ -10,9 +10,16 @@ spark-vs-oracle divergence that only the graded compare catches.
 This guard makes the class structurally impossible: walk every module
 under ``queries/`` with ``ast`` and assert no top-level name is bound
 by more than one plain assignment. Scoped to simple ``NAME = ...`` /
-``NAME: T = ...`` statements at module body level — function/class
-defs, imports, and ``__dunder__`` names are exempt (re-exports and
+``NAME: T = ...`` statements at module body level; only ``Name``
+targets count, so ``fn.__doc__ = fn.__doc__.format(...)`` binds
+nothing. Imports and ``__dunder__`` names are exempt (re-exports and
 ``__all__`` manipulation are legitimate).
+
+Helpers get the same guard: a top-level ``def``/``class`` name bound
+twice, or bound by both a ``def`` and a plain assignment, fails. A
+rebound helper silently changes every earlier query that calls it —
+e.g. ``similarity._dot`` (double fold) and ``semantic_dedup._dot``
+(long fold) would clash if their modules were merged.
 """
 
 from __future__ import annotations
@@ -29,6 +36,16 @@ QUERIES_DIR = (
 MODULES = sorted(QUERIES_DIR.glob("*.py"))
 
 
+def _bound_names(target: ast.expr) -> list[str]:
+    if isinstance(target, ast.Name):
+        return [target.id]
+    if isinstance(target, (ast.Tuple, ast.List)):
+        return [n for elt in target.elts for n in _bound_names(elt)]
+    if isinstance(target, ast.Starred):
+        return _bound_names(target.value)
+    return []
+
+
 def _toplevel_assigned_names(tree: ast.Module) -> list[str]:
     names: list[str] = []
     for node in tree.body:
@@ -38,10 +55,13 @@ def _toplevel_assigned_names(tree: ast.Module) -> list[str]:
         elif isinstance(node, ast.AnnAssign) and node.value is not None:
             targets = [node.target]
         for t in targets:
-            for sub in ast.walk(t):
-                if isinstance(sub, ast.Name) and not sub.id.startswith("__"):
-                    names.append(sub.id)
+            names += [n for n in _bound_names(t) if not n.startswith("__")]
     return names
+
+
+def _toplevel_defined_names(tree: ast.Module) -> list[str]:
+    defs = (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)
+    return [node.name for node in tree.body if isinstance(node, defs)]
 
 
 def test_query_modules_exist():
@@ -59,4 +79,18 @@ def test_no_duplicate_module_level_constant(path):
         "query bodies read them at call time, so a rebind silently "
         "diverges spark from oracle (the mm2/_N_VID incident) — rename "
         "the later constant"
+    )
+
+
+@pytest.mark.parametrize("path", MODULES, ids=lambda p: p.stem)
+def test_no_rebound_module_level_definition(path):
+    tree = ast.parse(path.read_text(), filename=str(path))
+    defs = _toplevel_defined_names(tree)
+    assigned = set(_toplevel_assigned_names(tree))
+    dupes = sorted({n for n in defs if defs.count(n) > 1 or n in assigned})
+    assert not dupes, (
+        f"{path.name} binds def/class name(s) {dupes} more than once "
+        "(def twice, or def plus assignment); the last binding silently "
+        "replaces the helper for every earlier query that calls it — "
+        "rename one of them"
     )

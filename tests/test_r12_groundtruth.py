@@ -114,7 +114,7 @@ def test_ev2_matches_pure_python_recount(spark, docs):
 
 
 def test_t16_matches_pure_python_recount(spark, docs_lang):
-    from big_data_analytics_spark.queries.text6 import (
+    from big_data_analytics_spark.queries.text import (
         _ZIPF_TOP,
         t16_zipf_fit,
     )
@@ -200,7 +200,7 @@ def test_w15_matches_pure_python_recount(spark):
     union the user sets of the trailing 7 calendar days."""
     import datetime
 
-    from big_data_analytics_spark.queries.windows2 import (
+    from big_data_analytics_spark.queries.windows import (
         w15_rolling_7d_distinct_users,
     )
 
@@ -235,7 +235,7 @@ def test_bpe3_matches_pure_python_bpe(spark):
     and checks bpe3's whole fertility table against it. A green row
     here independently certifies the string-replace trick for bpe1/2
     as well (same chain)."""
-    from big_data_analytics_spark.queries.text3 import (
+    from big_data_analytics_spark.queries.text import (
         _STEPS,
         bpe3_fertility,
     )

@@ -100,7 +100,7 @@ def test_t17_matches_textbook_kneser_ney(spark, doc_rows):
     the TEXTBOOK interpolated-KN formula — not the single-rational
     rearrangement both the Spark plan and the oracle evaluate — so an
     algebra slip in the rearrangement cannot match green."""
-    from big_data_analytics_spark.queries.text6 import (
+    from big_data_analytics_spark.queries.text import (
         t17_kneser_ney_bigram,
     )
 
@@ -214,7 +214,7 @@ def test_d10_matches_pure_python_cut(spark, doc_rows):
     8-gram into a corpus-wide Counter, mark positions whose 8-gram
     occurs >= 2 times, expand each marked position to K covered
     token indices, cut the union, and rebuild the text."""
-    from big_data_analytics_spark.queries.text5 import (
+    from big_data_analytics_spark.queries.text import (
         _K,
         d10_exact_substring_cut,
     )
@@ -253,7 +253,7 @@ def test_d10_matches_pure_python_cut(spark, doc_rows):
 def test_t18_matches_pure_python_pagerank(spark, doc_rows):
     """Textbook integer-micro-unit weighted PageRank over a dict-built
     co-occurrence graph — no DataFrame, no unrolled SQL."""
-    from big_data_analytics_spark.queries.text6 import (
+    from big_data_analytics_spark.queries.text import (
         _TR_ITER,
         _TR_TOP,
         t18_textrank_keywords,
@@ -292,7 +292,7 @@ def test_t18_matches_pure_python_pagerank(spark, doc_rows):
 def test_fs2_matches_pure_python_chi2(spark):
     """Exact-Fraction chi-square on dict-built contingency tables —
     no rearrangement shared with the engines' single-rational form."""
-    from big_data_analytics_spark.queries.text6 import (
+    from big_data_analytics_spark.queries.text import (
         _CHI_TOP,
         fs2_chi2_token_selection,
     )

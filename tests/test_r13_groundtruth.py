@@ -60,7 +60,7 @@ def test_t19_matches_pure_python_heaps(spark):
     vocabulary scan over doc_id order, no first-decile trick — so a
     shared formulation bug in the decile/min(dec) derivation cannot
     hash-match green."""
-    from big_data_analytics_spark.queries.text6 import (
+    from big_data_analytics_spark.queries.text import (
         _HEAPS_D,
         _HEAPS_Q,
         t19_heaps_law,
@@ -131,7 +131,7 @@ def test_t20_matches_pure_python_pmi(spark):
     cannot hash-match green. Also asserts the rank key's defining
     property: it orders bigrams exactly as true float PMI does,
     except where the 1e18 grid ties them (none at this sf)."""
-    from big_data_analytics_spark.queries.text6 import (
+    from big_data_analytics_spark.queries.text import (
         _PMI_MIN_C,
         _PMI_RQ,
         _PMI_TOP,

@@ -10,7 +10,7 @@ from __future__ import annotations
 
 import duckdb
 
-from big_data_analytics_spark.queries.text5 import _K
+from big_data_analytics_spark.queries.text import _K
 
 
 def _reference(texts: dict[int, str]) -> dict[int, tuple[int, int, int, int]]:
@@ -36,7 +36,7 @@ def _reference(texts: dict[int, str]) -> dict[int, tuple[int, int, int, int]]:
 
 
 def test_es1_matches_imperative_recount(spark):
-    from big_data_analytics_spark.queries.text5 import (
+    from big_data_analytics_spark.queries.text import (
         es1_exact_substring_spans,
     )
 

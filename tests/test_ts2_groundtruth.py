@@ -44,7 +44,7 @@ def _reference(rows):
 
 
 def test_ts2_matches_imperative_recount(spark):
-    from big_data_analytics_spark.queries.timeseries2 import (
+    from big_data_analytics_spark.queries.timeseries_queries import (
         ts2_hourly_gap_fill,
     )
 
