@@ -14,6 +14,16 @@ single-threaded — BASELINE.md) as pure column expressions over
   space; generation is a narrow map with no shuffle, so throughput
   scales linearly with cores — the 100 TB path is just `n=10**11`
   with more partitions.
+- **Built from SQL text**: each output column is one SQL string handed
+  to ``selectExpr``, and the helpers below (``_h``, ``_hint``,
+  ``_pick`` …) return SQL fragments, not ``Column`` objects. Every
+  ``Column`` node built in Python is a py4j round trip to the driver
+  JVM (about 0.1 ms each); building the five tables node by node took
+  ~7,800 of them (≈1 s per ``gen_all`` before any job started), while
+  the SQL form costs about one round trip per column, a few hundred in
+  all. The expressions are the same ones the ``Column`` API builds, so
+  rows and schemas are unchanged (``tests/test_datagen_identity.py``
+  pins both, and its round-trip guard keeps the count under 500).
 
 Schemas follow FIXTURES.md §1-5, which mirror the reference's data
 model exactly (structs, arrays-of-structs, string-keyed maps,
@@ -32,8 +42,7 @@ dataset_generator.py:269-299,388-404):
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame, SparkSession
 
 #: Fixed anchor (the reference anchors to wall-clock `now()`; fixtures
 #: pin T0 so golden files are stable — FIXTURES.md).
@@ -54,65 +63,74 @@ ADJ = ["Premium", "Classic", "Modern", "Deluxe", "Eco", "Smart", "Ultra",
 NOUN = ["Widget", "Gadget", "Lamp", "Speaker", "Backpack", "Bottle",
         "Charger", "Notebook", "Camera", "Headphones"]
 
+# SQL fragments below are built by string formatting from the literal
+# lists above and integer/float parameters only. Python floats are
+# written as ``repr(x)`` + ``D`` (a DOUBLE literal that parses back to
+# the same double; a bare ``0.1`` would be a DECIMAL).
 
-def _h(salt: str, *cols: Column) -> Column:
+
+def _dbl(x: float) -> str:
+    return f"{float(x)!r}D"
+
+
+def _h(salt: str, *cols: str) -> str:
     """Non-negative 64-bit hash of (salt, cols) — the randomness source."""
-    return F.abs(F.xxhash64(F.lit(salt), *cols))
+    return f"abs(xxhash64('{salt}', {', '.join(cols)}))"
 
 
-def _hint(salt: str, lo: int, hi: int, *cols: Column) -> Column:
+def _hint(salt: str, lo: int, hi: int, *cols: str) -> str:
     """Deterministic integer in [lo, hi]."""
-    return (F.pmod(_h(salt, *cols), F.lit(hi - lo + 1)) + lo).cast("int")
+    return f"CAST(pmod({_h(salt, *cols)}, {hi - lo + 1}) + {lo} AS INT)"
 
 
-def _huniform(salt: str, lo: float, hi: float, *cols: Column) -> Column:
+def _huniform(salt: str, lo: float, hi: float, *cols: str) -> str:
     """Deterministic double in [lo, hi)."""
-    u = F.pmod(_h(salt, *cols), F.lit(1_000_000)) / 1_000_000.0
-    return u * (hi - lo) + lo
+    u = f"pmod({_h(salt, *cols)}, 1000000) / {_dbl(1_000_000)}"
+    return f"(({u}) * {_dbl(hi - lo)} + {_dbl(lo)})"
 
 
-def _pick(salt: str, values: list[str], *cols: Column) -> Column:
+def _pick(salt: str, values: list[str], *cols: str) -> str:
     """Deterministic choice from a literal list."""
-    arr = F.array([F.lit(v) for v in values])
-    return F.element_at(arr, _hint(salt, 1, len(values), *cols))
+    arr = ", ".join(f"'{v}'" for v in values)
+    return f"element_at(array({arr}), {_hint(salt, 1, len(values), *cols)})"
 
 
-def _hex_id(prefix: str, salt: str, width: int, *cols: Column) -> Column:
+def _hex_id(prefix: str, salt: str, width: int, *cols: str) -> str:
     """Hash-derived hex id (reference uses uuid4().hex[:width],
     dataset_generator.py:74-80 — not seed-stable; this is)."""
-    return F.concat(F.lit(prefix),
-                    F.substring(F.sha2(F.concat_ws("|", F.lit(salt), *cols), 256), 1, width))
+    key = f"concat_ws('|', '{salt}', {', '.join(cols)})"
+    return f"concat('{prefix}', substring(sha2({key}, 256), 1, {width}))"
 
 
-def _iso(epoch_col: Column) -> Column:
+def _iso(epoch: str) -> str:
     """Epoch seconds → ISO-8601 string (reference stores ISO strings,
     dataset_generator.py:160)."""
-    return F.date_format(F.timestamp_seconds(epoch_col), "yyyy-MM-dd'T'HH:mm:ss")
+    return f"date_format(timestamp_seconds({epoch}), 'yyyy-MM-dd\\'T\\'HH:mm:ss')"
+
+
+def _geo(uid: str) -> str:
+    """The user's home city/state, shared by users and their sessions."""
+    return (f"'city', {_pick('city', CITIES, uid)}, "
+            f"'state', {_pick('state', STATES, uid)}, 'country', 'US'")
 
 
 # ---------------------------------------------------------------------
 # categories — dataset_generator.py:167-184
 # ---------------------------------------------------------------------
 def gen_categories(spark: SparkSession, n: int = 5) -> DataFrame:
-    df = spark.range(n).withColumn("cid", F.col("id").cast("int"))
-    cat_id = F.format_string("cat_%03d", F.col("cid"))
-    n_sub = _hint("nsub", 3, 5, F.col("cid"))
-    sub = F.transform(
-        F.sequence(F.lit(1), n_sub),
-        lambda i: F.struct(
-            F.format_string("sub_%03d_%02d", F.col("cid"), i).alias("subcategory_id"),
-            F.concat(_pick("subadj", ADJ, F.col("cid"), i), F.lit(" "),
-                     _pick("subnoun", NOUN, F.col("cid"), i)).alias("name"),
-            # uniform 0.10..0.40, 2dp (dataset_generator.py:177)
-            F.bround(_huniform("margin", 0.10, 0.40, F.col("cid"), i), 2)
-            .alias("profit_margin"),
-        ),
+    sub = (
+        f"transform(sequence(1, {_hint('nsub', 3, 5, 'cid')}), i -> named_struct("
+        "'subcategory_id', format_string('sub_%03d_%02d', cid, i), "
+        f"'name', concat({_pick('subadj', ADJ, 'cid', 'i')}, ' ', "
+        f"{_pick('subnoun', NOUN, 'cid', 'i')}), "
+        # uniform 0.10..0.40, 2dp (dataset_generator.py:177)
+        f"'profit_margin', bround({_huniform('margin', 0.10, 0.40, 'cid', 'i')}, 2)))"
     )
-    return df.select(
-        cat_id.alias("category_id"),
-        F.concat(_pick("catadj", ADJ, F.col("cid")), F.lit(" "),
-                 _pick("catnoun", NOUN, F.col("cid")), F.lit("s")).alias("name"),
-        sub.alias("subcategories"),
+    return spark.range(n).selectExpr("CAST(id AS INT) AS cid").selectExpr(
+        "format_string('cat_%03d', cid) AS category_id",
+        f"concat({_pick('catadj', ADJ, 'cid')}, ' ', "
+        f"{_pick('catnoun', NOUN, 'cid')}, 's') AS name",
+        f"{sub} AS subcategories",
     )
 
 
@@ -120,38 +138,30 @@ def gen_categories(spark: SparkSession, n: int = 5) -> DataFrame:
 # products — dataset_generator.py:190-221
 # ---------------------------------------------------------------------
 def gen_products(spark: SparkSession, n: int = 50, n_categories: int = 5) -> DataFrame:
-    df = spark.range(n).withColumn("pid", F.col("id").cast("int"))
-    pid = F.col("pid")
-    n_hist = _hint("nhist", 1, 3, pid)
+    n_hist = _hint("nhist", 1, 3, "pid")
     # price history: 1..3 entries, ascending dates, 2dp prices 5..500
-    hist = F.transform(
-        F.sequence(F.lit(1), n_hist),
-        lambda i: F.struct(
-            F.bround(_huniform("price", 5.0, 500.0, pid, i), 2).alias("price"),
-            _iso(F.lit(T0_EPOCH)
-                 - (n_hist - i + 1) * F.lit(30 * 86400)
-                 - _hint("histjit", 0, 86399, pid, i)).alias("date"),
-        ),
+    date = (f"{T0_EPOCH} - ({n_hist} - i + 1) * {30 * 86400}"
+            f" - {_hint('histjit', 0, 86399, 'pid', 'i')}")
+    hist = (
+        f"transform(sequence(1, {n_hist}), i -> named_struct("
+        f"'price', bround({_huniform('price', 5.0, 500.0, 'pid', 'i')}, 2), "
+        f"'date', {_iso(date)}))"
     )
-    return (
-        df.select(
-            pid.alias("pid"),
-            F.format_string("prod_%05d", pid).alias("product_id"),
-            F.initcap(F.concat(_pick("padj", ADJ, pid), F.lit(" "),
-                               _pick("pnoun", NOUN, pid))).alias("name"),
-            F.format_string("cat_%03d", F.pmod(_h("pcat", pid), F.lit(n_categories))
-                            .cast("int")).alias("category_id"),
-            hist.alias("price_history"),
-            _hint("stock", 413, 644, pid).alias("current_stock"),
-            (F.pmod(_h("active", pid), F.lit(100)) < 95).alias("is_active"),
-        )
-        .withColumns({
-            # base_price = most recent price; creation_date = first
-            # history date (dataset_generator.py:209,218)
-            "base_price": F.element_at(F.col("price_history"), -1).getField("price"),
-            "creation_date": F.element_at(F.col("price_history"), 1).getField("date"),
-        })
-        .drop("pid")
+    return spark.range(n).selectExpr("CAST(id AS INT) AS pid").selectExpr(
+        "format_string('prod_%05d', pid) AS product_id",
+        f"initcap(concat({_pick('padj', ADJ, 'pid')}, ' ', "
+        f"{_pick('pnoun', NOUN, 'pid')})) AS name",
+        f"format_string('cat_%03d', CAST(pmod({_h('pcat', 'pid')}, {n_categories})"
+        " AS INT)) AS category_id",
+        f"{hist} AS price_history",
+        f"{_hint('stock', 413, 644, 'pid')} AS current_stock",
+        f"pmod({_h('active', 'pid')}, 100) < 95 AS is_active",
+    ).selectExpr(
+        "*",
+        # base_price = most recent price; creation_date = first
+        # history date (dataset_generator.py:209,218)
+        "element_at(price_history, -1).price AS base_price",
+        "element_at(price_history, 1).date AS creation_date",
     )
 
 
@@ -159,20 +169,14 @@ def gen_products(spark: SparkSession, n: int = 50, n_categories: int = 5) -> Dat
 # users — dataset_generator.py:227-245
 # ---------------------------------------------------------------------
 def gen_users(spark: SparkSession, n: int = 100) -> DataFrame:
-    df = spark.range(n).withColumn("uid", F.col("id").cast("int"))
-    uid = F.col("uid")
-    reg_epoch = (F.lit(T0_EPOCH) - _hint("reg", 180, 270, uid) * 86400
-                 - _hint("regjit", 0, 86399, uid))
-    last_epoch = reg_epoch + _hint("last", 0, 180, uid) * 86400
-    return df.select(
-        F.format_string("user_%06d", uid).alias("user_id"),
-        F.struct(
-            _pick("city", CITIES, uid).alias("city"),
-            _pick("state", STATES, uid).alias("state"),
-            F.lit("US").alias("country"),
-        ).alias("geo_data"),
-        _iso(reg_epoch).alias("registration_date"),
-        _iso(F.least(last_epoch, F.lit(T0_EPOCH))).alias("last_active"),
+    reg_epoch = (f"{T0_EPOCH} - {_hint('reg', 180, 270, 'uid')} * 86400"
+                 f" - {_hint('regjit', 0, 86399, 'uid')}")
+    last_epoch = f"({reg_epoch}) + {_hint('last', 0, 180, 'uid')} * 86400"
+    return spark.range(n).selectExpr("CAST(id AS INT) AS uid").selectExpr(
+        "format_string('user_%06d', uid) AS user_id",
+        f"named_struct({_geo('uid')}) AS geo_data",
+        f"{_iso(reg_epoch)} AS registration_date",
+        f"{_iso(f'least({last_epoch}, {T0_EPOCH})')} AS last_active",
     )
 
 
@@ -185,151 +189,106 @@ def gen_sessions(spark: SparkSession, n: int = 2000, n_users: int = 100,
     partition duration_seconds exactly (proportional-split by hashed
     weights — the distributed restatement of the reference's
     consecutive-slot-diff construction, dataset_generator.py:271-274).
+
+    Each view's page type is computed once into the array ``pt`` and
+    its product into ``pp``; ``page_views`` and ``viewed_products`` both
+    read those arrays, so ``gen_transactions`` (which needs only the
+    cart) never builds the page-view structs and their timestamps.
     """
-    df = spark.range(n).withColumn("sid", F.col("id").cast("int"))
-    sid = F.col("sid")
+    conv_roll = f"pmod({_h('conv', 'sid')}, 100)"
+    is_conv = "conversion_status = 'converted'"
+    is_aband = "conversion_status = 'abandoned'"
+    either = f"({is_conv} OR {is_aband})"
 
-    uid = F.pmod(_h("suser", sid), F.lit(n_users)).cast("int")
-    conv_roll = F.pmod(_h("conv", sid), F.lit(100))
-    status = (
-        F.when(conv_roll < 25, "converted")
-        .when(conv_roll < 55, "abandoned")
-        .otherwise("browsed")
+    base = spark.range(n).selectExpr("CAST(id AS INT) AS sid").selectExpr(
+        "sid",
+        f"CAST(pmod({_h('suser', 'sid')}, {n_users}) AS INT) AS uid",
+        f"CASE WHEN {conv_roll} < 25 THEN 'converted'"
+        f" WHEN {conv_roll} < 55 THEN 'abandoned' ELSE 'browsed' END"
+        " AS conversion_status",
+        f"{_hint('dur', 30, 3600, 'sid')} AS duration_seconds",
+        f"{T0_EPOCH} - {_hint('sday', 0, 89, 'sid')} * 86400"
+        f" - {_hint('ssec', 0, 86399, 'sid')} AS start_epoch",
+    ).selectExpr(
+        "*",
+        f"CASE WHEN {is_conv} THEN {_hint('nv', 4, 10, 'sid')}"
+        f" WHEN {is_aband} THEN {_hint('nv', 3, 10, 'sid')}"
+        f" ELSE {_hint('nv', 1, 8, 'sid')} END AS n_views",
     )
-    n_views = (
-        F.when(F.col("conversion_status") == "converted", _hint("nv", 4, 10, sid))
-        .when(F.col("conversion_status") == "abandoned", _hint("nv", 3, 10, sid))
-        .otherwise(_hint("nv", 1, 8, sid))
-    )
-    duration = _hint("dur", 30, 3600, sid)
-    start_epoch = (F.lit(T0_EPOCH) - _hint("sday", 0, 89, sid) * 86400
-                   - _hint("ssec", 0, 86399, sid))
 
-    base = df.select(
-        sid.alias("sid"),
-        uid.alias("uid"),
-        status.alias("conversion_status"),
-        duration.alias("duration_seconds"),
-        start_epoch.alias("start_epoch"),
-    ).withColumns({
-        "n_views": n_views,
+    page_type = (
+        f"CASE WHEN {is_conv} AND i = n_views THEN 'confirmation'"
+        f" WHEN {is_conv} AND i = n_views - 1 THEN 'checkout'"
+        f" WHEN {either} AND i = 1 THEN 'product_detail'"
+        f" WHEN {is_aband} AND i = n_views THEN 'cart'"
+        f" WHEN {either} THEN {_pick('pt', PAGE_TYPES, 'sid', 'i')}"
+        f" ELSE {_pick('ptb', PAGE_TYPES[:4], 'sid', 'i')} END"
+    )
+    per_view = base.selectExpr(
+        "*",
         # per-view weights 1..99; durations split ∝ weight, exact sum
-        "w": F.transform(F.sequence(F.lit(1), n_views),
-                         lambda i: _hint("w", 1, 99, F.col("sid"), i).cast("long")),
-    }).withColumn(
-        "wtot", F.aggregate("w", F.lit(0).cast("long"), lambda acc, x: acc + x)
-    ).withColumn(
+        "transform(sequence(1, n_views),"
+        f" i -> CAST({_hint('w', 1, 99, 'sid', 'i')} AS BIGINT)) AS w",
+        f"transform(sequence(1, n_views), i -> {page_type}) AS pt",
+    ).selectExpr(
+        "*",
+        "aggregate(w, CAST(0 AS BIGINT), (acc, x) -> acc + x) AS wtot",
+        "transform(pt, (p, j) -> CASE WHEN p = 'product_detail' THEN"
+        f" format_string('prod_%05d', CAST(pmod({_h('pvprod', 'sid', 'j + 1')},"
+        f" {n_products}) AS INT)) ELSE NULL END) AS pp",
+    ).selectExpr(
+        "*",
         # cumulative offsets in seconds: off[i] = floor(d * cumw_i / wtot),
         # off[0] = 0, off[n] = d exactly (telescoping)
-        "off",
-        F.transform(
-            F.sequence(F.lit(0), F.col("n_views")),
-            lambda i: F.floor(
-                F.col("duration_seconds")
-                * F.aggregate(F.slice("w", F.lit(1), i), F.lit(0).cast("long"),
-                              lambda acc, x: acc + x)
-                / F.col("wtot")
-            ),
-        ),
-    )
-
-    is_conv = F.col("conversion_status") == "converted"
-    is_aband = F.col("conversion_status") == "abandoned"
-    nv = F.col("n_views")
-
-    def page_type(i):
-        weighted = _pick("pt", PAGE_TYPES, F.col("sid"), i)
-        no_cart = _pick("ptb", PAGE_TYPES[:4], F.col("sid"), i)
-        return (
-            F.when(is_conv & (i == nv), "confirmation")
-            .when(is_conv & (i == nv - 1), "checkout")
-            .when((is_conv | is_aband) & (i == 1), "product_detail")
-            .when(is_aband & (i == nv), "cart")
-            .when(is_conv | is_aband, weighted)
-            .otherwise(no_cart)
-        )
-
-    def page_product(i, ptype):
-        pidx = F.pmod(_h("pvprod", F.col("sid"), i), F.lit(n_products)).cast("int")
-        return F.when(ptype == "product_detail",
-                      F.format_string("prod_%05d", pidx)).otherwise(F.lit(None))
-
-    def page_category(i, ptype):
-        cidx = F.pmod(_h("pvcat", F.col("sid"), i), F.lit(n_categories)).cast("int")
-        return F.when(ptype == "category_listing",
-                      F.format_string("cat_%03d", cidx)).otherwise(F.lit(None))
-
-    with_pv = base.withColumn(
-        "page_views",
-        F.transform(
-            F.sequence(F.lit(1), nv),
-            lambda i: F.struct(
-                _iso(F.col("start_epoch")
-                     + F.element_at("off", i)).alias("timestamp"),
-                page_type(i).alias("page_type"),
-                page_product(i, page_type(i)).alias("product_id"),
-                page_category(i, page_type(i)).alias("category_id"),
-                (F.element_at("off", i + F.lit(1)) - F.element_at("off", i))
-                .cast("int").alias("view_duration"),
-            ),
-        ),
-    ).withColumn(
+        "transform(sequence(0, n_views), i -> floor(duration_seconds"
+        " * aggregate(slice(w, 1, i), CAST(0 AS BIGINT), (acc, x) -> acc + x)"
+        " / wtot)) AS off",
         # distinct product_detail targets, in first-view order
         # (reference builds a set, dataset_generator.py:269,280,316)
-        "viewed_products",
-        F.array_distinct(
-            F.transform(
-                F.filter("page_views", lambda p: p.getField("page_type") == "product_detail"),
-                lambda p: p.getField("product_id"),
-            )
-        ),
+        "array_distinct(filter(pp, x -> x IS NOT NULL)) AS viewed_products",
     )
 
+    page_views = (
+        "transform(pt, (p, j) -> named_struct("
+        f"'timestamp', {_iso('start_epoch + element_at(off, j + 1)')}, "
+        "'page_type', p, "
+        "'product_id', pp[j], "
+        "'category_id', CASE WHEN p = 'category_listing' THEN"
+        f" format_string('cat_%03d', CAST(pmod({_h('pvcat', 'sid', 'j + 1')},"
+        f" {n_categories}) AS INT)) ELSE NULL END, "
+        "'view_duration', CAST(element_at(off, j + 2) - element_at(off, j + 1)"
+        " AS INT)))"
+    )
     # cart: first k viewed products; entry price == the product's
     # base_price (same hash construction as gen_products)
-    def cart_entry(p):
-        pnum = F.substring(p, 6, 5).cast("int")
-        hist_len = _hint("nhist", 1, 3, pnum)
-        price = F.bround(_huniform("price", 5.0, 500.0, pnum, hist_len), 2)
-        return F.struct(
-            _hint("cqty", 1, 3, F.col("sid"), pnum).alias("quantity"),
-            price.alias("price"),
-        )
-
-    k = _hint("cartk", 1, 3, F.col("sid"))
-    cart = F.when(
-        is_conv | is_aband,
-        F.map_from_arrays(
-            F.slice("viewed_products", 1, k),
-            F.transform(F.slice("viewed_products", 1, k), cart_entry),
-        ),
-    ).otherwise(F.map_from_arrays(F.array(), F.array().cast("array<struct<quantity:int,price:double>>")))
-
-    return with_pv.withColumn("cart_contents", cart).select(
-        _hex_id("sess_", "sessid", 10, F.col("sid")).alias("session_id"),
-        F.format_string("user_%06d", F.col("uid")).alias("user_id"),
-        _iso(F.col("start_epoch")).alias("start_time"),
-        _iso(F.col("start_epoch") + F.col("duration_seconds")).alias("end_time"),
-        F.col("duration_seconds"),
-        F.struct(
-            _pick("city", CITIES, F.col("uid")).alias("city"),
-            _pick("state", STATES, F.col("uid")).alias("state"),
-            F.lit("US").alias("country"),
-            F.concat_ws(".", _hint("ip1", 1, 254, F.col("sid")),
-                        _hint("ip2", 0, 254, F.col("sid")),
-                        _hint("ip3", 0, 254, F.col("sid")),
-                        _hint("ip4", 1, 254, F.col("sid"))).alias("ip_address"),
-        ).alias("geo_data"),
-        F.struct(
-            _pick("dev", DEVICE_TYPES, F.col("sid")).alias("type"),
-            _pick("os", OS_NAMES, F.col("sid")).alias("os"),
-            _pick("browser", BROWSERS, F.col("sid")).alias("browser"),
-        ).alias("device_profile"),
+    pnum = "CAST(substring(p, 6, 5) AS INT)"
+    price = _huniform("price", 5.0, 500.0, pnum, _hint("nhist", 1, 3, pnum))
+    cart_entry = (f"p -> named_struct('quantity', {_hint('cqty', 1, 3, 'sid', pnum)},"
+                  f" 'price', bround({price}, 2))")
+    first_k = f"slice(viewed_products, 1, {_hint('cartk', 1, 3, 'sid')})"
+    cart = (
+        f"CASE WHEN {either} THEN map_from_arrays({first_k},"
+        f" transform({first_k}, {cart_entry}))"
+        " ELSE map_from_arrays(array(),"
+        " CAST(array() AS array<struct<quantity:int,price:double>>)) END"
+    )
+    ip = ", ".join(_hint(f"ip{k}", lo, 254, "sid")
+                   for k, lo in ((1, 1), (2, 0), (3, 0), (4, 1)))
+    return per_view.selectExpr(
+        f"{_hex_id('sess_', 'sessid', 10, 'sid')} AS session_id",
+        "format_string('user_%06d', uid) AS user_id",
+        f"{_iso('start_epoch')} AS start_time",
+        f"{_iso('start_epoch + duration_seconds')} AS end_time",
+        "duration_seconds",
+        f"named_struct({_geo('uid')}, 'ip_address', concat_ws('.', {ip})) AS geo_data",
+        f"named_struct('type', {_pick('dev', DEVICE_TYPES, 'sid')}, "
+        f"'os', {_pick('os', OS_NAMES, 'sid')}, "
+        f"'browser', {_pick('browser', BROWSERS, 'sid')}) AS device_profile",
         "viewed_products",
-        "page_views",
-        "cart_contents",
+        f"{page_views} AS page_views",
+        f"{cart} AS cart_contents",
         "conversion_status",
-        _pick("ref", REFERRERS, F.col("sid")).alias("referrer"),
+        f"{_pick('ref', REFERRERS, 'sid')} AS referrer",
     )
 
 
@@ -341,41 +300,33 @@ def gen_transactions(sessions: DataFrame) -> DataFrame:
     per-item subtotal = bround(qty*price, 2), txn subtotal = Σ items,
     20% discount chance at a rate ∈ {.05,.1,.15,.2}, total =
     bround(subtotal − discount, 2) (dataset_generator.py:388-404)."""
-    conv = sessions.filter(F.col("conversion_status") == "converted")
-    items = F.transform(
-        F.array_sort(F.map_entries("cart_contents")),
-        lambda e: F.struct(
-            e.getField("key").alias("product_id"),
-            e.getField("value").getField("quantity").alias("quantity"),
-            e.getField("value").getField("price").alias("unit_price"),
-            F.bround(
-                e.getField("value").getField("quantity")
-                * e.getField("value").getField("price"), 2
-            ).alias("subtotal"),
-        ),
+    items = (
+        "transform(array_sort(map_entries(cart_contents)), e -> named_struct("
+        "'product_id', e.key, 'quantity', e.value.quantity,"
+        " 'unit_price', e.value.price,"
+        " 'subtotal', bround(e.value.quantity * e.value.price, 2)))"
     )
-    with_items = conv.withColumn("items", items).withColumn(
-        "subtotal",
-        F.aggregate("items", F.lit(0.0), lambda acc, x: acc + x.getField("subtotal")),
-    )
-    disc_roll = F.pmod(_h("disc", F.col("session_id")), F.lit(100))
-    rate = F.element_at(
-        F.array(F.lit(0.05), F.lit(0.10), F.lit(0.15), F.lit(0.20)),
-        _hint("drate", 1, 4, F.col("session_id")),
-    )
-    discount = F.when(disc_roll < 20,
-                      F.bround(F.col("subtotal") * rate, 2)).otherwise(F.lit(0.0))
-    return with_items.select(
-        _hex_id("txn_", "txnid", 12, F.col("session_id")).alias("transaction_id"),
+    rates = ", ".join(_dbl(r) for r in (0.05, 0.10, 0.15, 0.20))
+    rate = f"element_at(array({rates}), {_hint('drate', 1, 4, 'session_id')})"
+    discount = (f"CASE WHEN pmod({_h('disc', 'session_id')}, 100) < 20"
+                f" THEN bround(subtotal * {rate}, 2) ELSE {_dbl(0.0)} END")
+    return sessions.filter("conversion_status = 'converted'").selectExpr(
+        "session_id", "user_id", "end_time", f"{items} AS items",
+    ).selectExpr(
+        "*", f"aggregate(items, {_dbl(0.0)}, (acc, x) -> acc + x.subtotal) AS subtotal",
+    ).selectExpr(
+        "*", f"{discount} AS discount",
+    ).selectExpr(
+        f"{_hex_id('txn_', 'txnid', 12, 'session_id')} AS transaction_id",
         "session_id",
         "user_id",
-        F.col("end_time").alias("timestamp"),
+        "end_time AS timestamp",
         "items",
         "subtotal",
-        discount.alias("discount"),
-        F.bround(F.col("subtotal") - discount, 2).alias("total"),
-        _pick("pay", PAYMENT_METHODS, F.col("session_id")).alias("payment_method"),
-        F.lit("completed").alias("status"),
+        "discount",
+        "bround(subtotal - discount, 2) AS total",
+        f"{_pick('pay', PAYMENT_METHODS, 'session_id')} AS payment_method",
+        "'completed' AS status",
     )
 
 

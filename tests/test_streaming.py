@@ -500,3 +500,50 @@ def test_sm14_provider_conf_restored(spark):
     except Exception:
         after = None
     assert after == before
+
+
+def test_stream_source_schema_follows_a_regenerated_fixture(spark, tmp_path):
+    """The file-source schema is memoized per session on the fixture
+    path and the source signature in its ``_DONE``: the same signature
+    reuses it, a rebuilt fixture (new signature) is read afresh."""
+    from big_data_analytics_spark.caching import derived_fixture
+    from big_data_analytics_spark.queries.streaming_queries import (
+        _stream_source,
+    )
+
+    root = tmp_path / "fx"
+    data = str(root / "data")
+
+    def build(cols):
+        return lambda: spark.range(3).selectExpr(*cols).write.parquet(data)
+
+    derived_fixture(root, "v1", build(["id", "id * 2 AS a"]))
+    assert _stream_source(spark, root).columns == ["id", "a"]
+    # same signature: the memoized schema stands (files are not re-read)
+    shutil.rmtree(data)
+    spark.range(3).selectExpr("id", "'x' AS b").write.parquet(data)
+    assert _stream_source(spark, root).columns == ["id", "a"]
+    derived_fixture(root, "v2", build(["id", "id * 2 AS a", "'y' AS c"]))
+    assert _stream_source(spark, root).columns == ["id", "a", "c"]
+
+
+def test_streaming_queries_leave_no_memory_sink_views(spark):
+    """Each memory-sink stream registers a temp view; the queries drop
+    it once their result is resolved, and the results stay readable
+    and equal across calls."""
+    from big_data_analytics_spark.queries.streaming_queries import (
+        sm1_stream_daily_metrics,
+        sm3_stream_dedup_ingest,
+    )
+
+    def views():
+        return sorted(t.name for t in spark.catalog.listTables()
+                      if "_mem_" in t.name)
+
+    before = views()
+    sm1 = [sm1_stream_daily_metrics(spark, SF_SMOKE) for _ in range(3)]
+    sm3 = sm3_stream_dedup_ingest(spark, SF_SMOKE)
+    assert views() == before == []
+    first = sorted(sm1[0].collect())
+    assert first and all(sorted(df.collect()) == first for df in sm1[1:])
+    assert sm3.count() > 0
