@@ -39,7 +39,7 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from big_data_analytics_spark.queries import load_all
-from big_data_analytics_spark.session import get_spark
+from big_data_analytics_spark.session import codegen_compiles, get_spark
 
 #: FROZEN 23-query core (the round-3 headline set, one per major plan
 #: shape: scan-agg, join-agg, top-k, outer join, window,
@@ -472,14 +472,24 @@ def main() -> None:
      .write.format("noop").mode("overwrite").save())
     cold["sm4_backfill_1trigger"] = round(time.perf_counter() - t0, 3)
 
-    def _best(q) -> float:
+    #: classes Janino compiled during each query's repeat runs (after
+    #: its first run here): 0 once the generated-code cache holds the
+    #: working set, except for queries whose generated source changes
+    #: from call to call (SCALE.md, "Generated-code cache")
+    compiles: dict[str, int] = {}
+
+    def _best(name) -> float:
         # best of 2; sub-second queries get a third run — their
         # round-over-round comparisons sit inside the machine-drift
         # band, so one extra sample tightens the minimum for exactly
         # the timings drift distorts the most
-        best = min(_run(q, spark, sf_dir), _run(q, spark, sf_dir))
+        q = registry[name]
+        first = _run(q, spark, sf_dir)
+        c0 = codegen_compiles(spark)
+        best = min(first, _run(q, spark, sf_dir))
         if best < 1.0:
             best = min(best, _run(q, spark, sf_dir))
+        compiles[name] = codegen_compiles(spark) - c0
         return round(best, 3)
 
     from big_data_analytics_spark.caching import evict_all
@@ -491,8 +501,8 @@ def main() -> None:
             evict_all()
             spark.catalog.clearCache()
         prev_family = _family(name)
-        timings[name] = _best(registry[name])
-    fixed = {name: _best(registry[name]) for name in FIXED}
+        timings[name] = _best(name)
+    fixed = {name: _best(name) for name in FIXED}
     _fresh = _freshness(registry)
 
     total = round(sum(timings.values()), 3)
@@ -552,7 +562,10 @@ def main() -> None:
     with open(os.path.join(os.path.dirname(os.path.abspath(__file__)),
                            "BENCH_FULL.latest.json"), "w") as f:
         json.dump({**summary, "cold_queries": cold,
-                   "freshness_hist": _fresh["hist"]}, f, indent=1)
+                   "freshness_hist": _fresh["hist"],
+                   "codegen_compiles": compiles,
+                   "codegen_compiles_total": sum(compiles.values())},
+                  f, indent=1)
     # the LINE carries per-query numbers for the HEADLINE set only:
     # FIXED queries are constant-size fixtures whose round-over-round
     # signal is fixed_total — their per-query detail (and everything

@@ -10,7 +10,23 @@ large cluster:
 - Arrow on (vectorized pandas UDF / toPandas transfer);
 - shuffle partitions sized to cores locally; on a real cluster the
   ``spark.sql.adaptive.coalescePartitions`` path makes the static number
-  mostly irrelevant as long as the initial value is high enough.
+  mostly irrelevant as long as the initial value is high enough;
+- a generated-code cache that holds the package's working set. Spark
+  keeps the compiled whole-stage and expression classes in one JVM-wide
+  LRU cache of ``spark.sql.codegen.cache.maxEntries`` entries, 100 by
+  default. A perfbench ``dashboard`` pass needs 261 classes, an
+  ``ingest`` pass 134, one pass of ``bench.py``'s sf0.1 sets 1,518 and
+  one pass over the whole registry at sf0.001 4,213, so at 100 every
+  warm pass evicted and recompiled most of its classes through Janino
+  (240-270 a ``dashboard`` pass, 80-100 an ``ingest`` pass), and the
+  fresh bytecode never got JIT-compiled.
+  Holding the classes costs less metaspace than churning them: after 8
+  ``dashboard`` passes 165.7 MB against 185.9 MB, after 6 ``ingest``
+  passes 179.2 MB against 182.4 MB. The conf is static: Spark reads it
+  once, when the JVM first generates code, so it reaches only JVMs
+  launched through ``get_spark``. A session handed to
+  ``__spark_entry__`` by a driver harness keeps its own value, because
+  a static conf cannot be set on a running session.
 """
 
 from __future__ import annotations
@@ -39,6 +55,12 @@ _DEFAULTS = {
     # need more execution memory for the same plans — override via
     # SPARK_GRAFT_DRIVER_MEM, it only takes effect at JVM launch.
     "spark.driver.memory": os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"),
+    # The largest measured working set, one pass over the registry at
+    # sf0.001, is 4,213 distinct classes; Guava splits the cache into 4
+    # segments that evict on their own, so 10,000 leaves each segment
+    # more than twice its share. A warm ``dashboard`` pass then compiles 0
+    # classes instead of 240-270. Static: read at the JVM's first codegen.
+    "spark.sql.codegen.cache.maxEntries": "10000",
 }
 
 
@@ -70,3 +92,10 @@ def get_spark(app_name: str = "big_data_analytics_spark",
     for k, v in _DEFAULTS.items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
+
+
+def codegen_compiles(spark: SparkSession) -> int:
+    """Classes Janino has compiled in this JVM so far; each one is a
+    miss of Spark's generated-code cache."""
+    return (spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+            .METRIC_COMPILATION_TIME().getCount())
