@@ -170,6 +170,16 @@ def minhash_signatures(df: DataFrame, text_col: str = "text",
     )
 
 
+def _agreement(sig_a: str, sig_b: str) -> Column:
+    """MinHash Jaccard estimate: the share of signature positions on
+    which the two signatures agree."""
+    return (
+        F.size(F.filter(F.zip_with(sig_a, sig_b, lambda x, y: x == y),
+                        lambda eq: eq)).cast("double")
+        / F.size(sig_a)
+    )
+
+
 def minhash_lsh_pairs(df: DataFrame, text_col: str = "text",
                       id_col: str = "doc_id", num_hashes: int = 128,
                       shingle_k: int = 3, bands: int = 16,
@@ -246,17 +256,12 @@ def minhash_lsh_pairs(df: DataFrame, text_col: str = "text",
                         F.col("signature").alias("sig_a"))
     sig_b = sigs.select(F.col(id_col).alias("id_b"),
                         F.col("signature").alias("sig_b"))
-    est = (
-        F.size(F.filter(F.zip_with("sig_a", "sig_b", lambda x, y: x == y),
-                        lambda eq: eq)).cast("double")
-        / F.size("sig_a")
-    )
     # signature rows are payload-heavy (num_hashes-long arrays): pin
     # on the ELEMENT count per the operators/joins.py guidance
     return (
         cand.join(sized_side(sig_a, n_sigs * num_hashes), "id_a")
         .join(sized_side(sig_b, n_sigs * num_hashes), "id_b")
-        .withColumn("est_jaccard", est)
+        .withColumn("est_jaccard", _agreement("sig_a", "sig_b"))
         .filter(F.col("est_jaccard") >= threshold)
         .select("id_a", "id_b", "est_jaccard")
     )
@@ -336,11 +341,6 @@ def cross_corpus_lsh_pairs(left: DataFrame, right: DataFrame,
         .select("left_id", "right_id")
         .dropDuplicates(["left_id", "right_id"])
     )
-    est = (
-        F.size(F.filter(F.zip_with("sig_a", "sig_b", lambda x, y: x == y),
-                        lambda eq: eq)).cast("double")
-        / F.size("sig_a")
-    )
     return (
         cand.join(sized_side(
             sig_l.select(F.col(id_col).alias("left_id"),
@@ -350,7 +350,7 @@ def cross_corpus_lsh_pairs(left: DataFrame, right: DataFrame,
             sig_r.select(F.col(id_col).alias("right_id"),
                          F.col("signature").alias("sig_b")),
             n_r * num_hashes), "right_id")
-        .withColumn("est_jaccard", est)
+        .withColumn("est_jaccard", _agreement("sig_a", "sig_b"))
         .filter(F.col("est_jaccard") >= threshold)
         .select("left_id", "right_id", "est_jaccard")
     )

@@ -105,15 +105,14 @@ def connected_components(
             ),
             checkpoint,
         )
-        changed = (
+        unchanged = (
             new_labels.alias("n")
             .join(labels.alias("o"), "node")
             .filter(F.col("n.label") != F.col("o.label"))
-            .limit(1)
-            .count()
+            .isEmpty()
         )
         labels = new_labels
-        if changed == 0:
+        if unchanged:
             converged = True
             break
     if not converged:
@@ -246,8 +245,7 @@ def connected_components_star(
             # correctness never rests on the 2^-64 collision odds of
             # the hash pair. Cost: one join on the FINAL (smallest)
             # edge set, only in the round that terminates.
-            if (prev.join(e, ["u", "v"], "left_anti")
-                    .limit(1).count() == 0):
+            if prev.join(e, ["u", "v"], "left_anti").isEmpty():
                 converged = True
                 break
         sig = new_sig

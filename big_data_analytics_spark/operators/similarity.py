@@ -1,4 +1,5 @@
-"""Similarity search over embedding columns (array<float>).
+"""Similarity search over embedding columns (array<float>), and the
+one home of the package's vector arithmetic.
 
 Two tiers:
 
@@ -15,8 +16,17 @@ Also ``embedding_near_dup_pairs`` — corpus self-join at a cosine
 threshold via the same bucketing (embedding-space near-duplicate
 detection for training corpora).
 
-Vectors are cast to double before arithmetic; dot products are
-sequential JVM folds (F.aggregate), no Python on the hot path.
+Vector arithmetic lives here and nowhere else: ``dot``, ``sq_l2``,
+``l2_norm`` and ``cosine``, called by every vector query (v1-v11, d8,
+ml5/ml6). Each is one sequential JVM fold,
+``aggregate(zip_with(a, b, f), zero, acc + x)``: sums add left to
+right, with no Python on the hot path. ``zero`` sets the accumulator:
+``0.0`` for float embeddings cast with ``col.cast("array<double>")``,
+``0`` (BIGINT) for the exact micro-unit integers of ml5/d8. A ragged
+pair raises instead of the NULL ``zip_with`` would give; a NULL array
+still yields NULL. The folds are not unrolled into ``element_at``
+chains, which ran 9-13x slower from width 32 under whole-stage codegen
+(SCALE.md, "Array folds and codegen").
 """
 
 from __future__ import annotations
@@ -26,14 +36,32 @@ from pyspark.sql import functions as F
 
 from big_data_analytics_spark.caching import register_cache
 
+#: Width of the ``embeddings`` fixture's vectors, pinned by
+#: tests/test_ml_queries.py::test_embedding_fixture_is_fixed_width.
+EMBEDDING_DIM = 64
 
-def as_double(col: Column) -> Column:
-    return F.transform(col, lambda x: x.cast("double"))
+
+def _fold(a: Column, b: Column, term, zero: float | int) -> Column:
+    """sum of ``term(a[i], b[i])``, added left to right from ``zero``;
+    an int ``zero`` makes the accumulator BIGINT."""
+    acc0 = F.lit(zero) if isinstance(zero, float) else F.lit(zero).cast("long")
+    fold = F.aggregate(F.zip_with(a, b, term), acc0, lambda acc, x: acc + x)
+    if a is b:
+        # a self-pair is never ragged; skipping the check saves its
+        # driver-side build, about a fifth of the fold's
+        return fold
+    return F.when(F.array_size(a) != F.array_size(b), F.raise_error(
+        F.lit("vector length mismatch"))).otherwise(fold)
 
 
-def dot(a: Column, b: Column) -> Column:
-    return F.aggregate(F.zip_with(a, b, lambda x, y: x * y),
-                       F.lit(0.0), lambda acc, x: acc + x)
+def dot(a: Column, b: Column, zero: float | int = 0.0) -> Column:
+    return _fold(a, b, lambda x, y: x * y, zero)
+
+
+def sq_l2(a: Column, b: Column, zero: float | int = 0.0) -> Column:
+    """Squared L2 distance: monotone with the distance, so rankings by
+    it need no sqrt."""
+    return _fold(a, b, lambda x, y: (x - y) * (x - y), zero)
 
 
 def l2_norm(a: Column) -> Column:
@@ -54,7 +82,7 @@ def cosine_topk(corpus: DataFrame, queries: DataFrame, k: int = 10,
     per partition before the (tiny) final shuffle. Norms are computed
     once per row (not per pair): the per-pair work is one dot product
     and a divide."""
-    cvec = as_double(F.col(vec_col))
+    cvec = F.col(vec_col).cast("array<double>")
     c = corpus.select(F.col(id_col).alias("neighbor_id"),
                       cvec.alias("cv")).withColumn("cn", l2_norm(F.col("cv")))
     q = queries.select(F.col(query_id_col).alias("query_id"),
@@ -105,7 +133,7 @@ def _bucket_sql(vec_sql: str, planes: list[list[float]]) -> str:
     0.24 s warm), which dominated v3/v4/v7 wall-clock. ``repr(c)``
     literals round-trip exactly through Spark's correctly-rounded
     parser (``D`` suffix keeps them DOUBLE, matching F.lit), and the
-    fold is the same sequential aggregate(zip_with) as before, so
+    fold is the same sequential aggregate(zip_with) as :func:`dot`, so
     bucket values — and every downstream oracle hash — are unchanged."""
     terms = ["0L"]
     for i, p in enumerate(planes):
@@ -146,8 +174,8 @@ def _lsh_bucketed(df: DataFrame, idc: str, vec_col: str,
                   alias_vec: str, alias_norm: str,
                   planes: list[list[list[float]]],
                   n_tables: int) -> DataFrame:
-    vec_sql = f"transform(`{vec_col}`, x -> CAST(x AS DOUBLE))"
-    v = as_double(F.col(vec_col))
+    vec_sql = f"CAST(`{vec_col}` AS ARRAY<DOUBLE>)"
+    v = F.col(vec_col).cast("array<double>")
     return df.select(
         F.col(idc), v.alias(alias_vec),
         l2_norm(v).alias(alias_norm),
@@ -156,7 +184,7 @@ def _lsh_bucketed(df: DataFrame, idc: str, vec_col: str,
 
 
 def lsh_index(corpus: DataFrame, id_col: str = "vec_id",
-              vec_col: str = "embedding", dim: int = 64,
+              vec_col: str = "embedding", dim: int = EMBEDDING_DIM,
               n_planes: int = 8, n_tables: int = 8,
               salt: str = "rhp") -> DataFrame:
     """The build-once LSH index relation: (neighbor_id, cv, cn,
@@ -177,7 +205,7 @@ def lsh_index(corpus: DataFrame, id_col: str = "vec_id",
 
 def lsh_topk(corpus: DataFrame | None, queries: DataFrame, k: int = 10,
              id_col: str = "vec_id", vec_col: str = "embedding",
-             query_id_col: str = "query_id", dim: int = 64,
+             query_id_col: str = "query_id", dim: int = EMBEDDING_DIM,
              n_planes: int = 8, n_tables: int = 8,
              salt: str = "rhp", index: DataFrame | None = None) -> DataFrame:
     """Approximate top-k via random-hyperplane LSH.
@@ -219,7 +247,7 @@ def lsh_topk(corpus: DataFrame | None, queries: DataFrame, k: int = 10,
 
 def embedding_near_dup_pairs(corpus: DataFrame, threshold: float = 0.95,
                              id_col: str = "vec_id", vec_col: str = "embedding",
-                             dim: int = 64, n_planes: int = 10,
+                             dim: int = EMBEDDING_DIM, n_planes: int = 10,
                              n_tables: int = 6) -> DataFrame:
     """Corpus self-join: pairs with cosine ≥ threshold, LSH-bucketed.
 
@@ -241,8 +269,8 @@ def embedding_near_dup_pairs(corpus: DataFrame, threshold: float = 0.95,
         spread_if_undersplit,
     )
     corpus = spread_if_undersplit(corpus)
-    v = as_double(F.col(vec_col))
-    vec_sql = f"transform(`{vec_col}`, x -> CAST(x AS DOUBLE))"
+    v = F.col(vec_col).cast("array<double>")
+    vec_sql = f"CAST(`{vec_col}` AS ARRAY<DOUBLE>)"
     b = corpus.select(
         F.col(id_col).alias("id"), v.alias("v"),
         l2_norm(v).alias("n"),
@@ -296,7 +324,7 @@ def ivf_build(corpus: DataFrame, id_col: str = "vec_id",
         raise ValueError(f"fit_fraction must be in (0, 1], got {fit_fraction}")
     vecs = corpus.select(
         id_col, vec_col,
-        array_to_vector(as_double(F.col(vec_col))).alias("__v"),
+        array_to_vector(F.col(vec_col).cast("array<double>")).alias("__v"),
     )
     fit_set = (vecs if fit_fraction >= 1.0
                else vecs.sample(fraction=fit_fraction, seed=seed))
@@ -349,17 +377,11 @@ def ivf_topk(assigned: DataFrame, centroids: list[list[float]],
         "cell int, centroid array<double>",
     )
     q = queries.select(F.col(query_id_col).alias("__qid"),
-                       as_double(F.col(vec_col)).alias("qv"))
-    # squared euclidean — monotone with distance, so the top-nprobe
-    # ordering is identical and the sqrt is unnecessary
-    sq_dist = F.aggregate(
-        F.zip_with(F.col("qv"), F.col("centroid"), lambda x, y: (x - y) * (x - y)),
-        F.lit(0.0), lambda acc, x: acc + x,
-    )
+                       F.col(vec_col).cast("array<double>").alias("qv"))
     probe_w = Window.partitionBy("__qid").orderBy(F.asc("sq_dist"), F.asc("cell"))
     probes = (
         q.crossJoin(F.broadcast(cent))
-        .withColumn("sq_dist", sq_dist)
+        .withColumn("sq_dist", sq_l2(F.col("qv"), F.col("centroid")))
         .withColumn("rn", F.row_number().over(probe_w))
         .filter(F.col("rn") <= nprobe)
         .select("__qid", "cell", "qv")
@@ -368,7 +390,7 @@ def ivf_topk(assigned: DataFrame, centroids: list[list[float]],
         "__qid",
         F.col(id_col).alias("neighbor_id"),
         "qv",
-        as_double(F.col(vec_col)).alias("cv"),
+        F.col(vec_col).cast("array<double>").alias("cv"),
     )
     scored = cand.select(
         "__qid", "neighbor_id",
@@ -409,7 +431,8 @@ def pq_build(corpus: DataFrame, id_col: str = "vec_id",
     dim_row = corpus.select(F.size(vec_col).alias("d")).first()
     sub = dim_row["d"] // m
     assert sub * m == dim_row["d"], "m must divide the dimension"
-    work = corpus.select(id_col, as_double(F.col(vec_col)).alias("__v"))
+    work = corpus.select(id_col,
+                         F.col(vec_col).cast("array<double>").alias("__v"))
     codebooks = []
     codes = work.select(id_col)
     for i in range(m):
@@ -445,7 +468,7 @@ def pq_topk(codes: DataFrame, codebooks, queries: DataFrame,
     import numpy as np
 
     m = len(codebooks)
-    q_rows = queries.select(qid_col, as_double(F.col(vec_col))
+    q_rows = queries.select(qid_col, F.col(vec_col).cast("array<double>")
                             .alias("__q")).collect()
     sub = len(codebooks[0][0])
     table_rows = []

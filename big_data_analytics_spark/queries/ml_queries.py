@@ -31,27 +31,21 @@ from big_data_analytics_spark.catalog import load_table
 from big_data_analytics_spark.operators.joins import sized_side
 from big_data_analytics_spark.queries import query
 from big_data_analytics_spark.operators.partitioning import spread_if_undersplit
+from big_data_analytics_spark.operators.similarity import EMBEDDING_DIM, sq_l2
 
 #: Embedding micro-unit quantization scale (matches d2b/v5/v6 lineage:
 #: float32 -> double is exact widening, *1e6 and FLOOR are identical
 #: IEEE ops in both engines).
 _EMB_SCALE = 1_000_000.0
-_DIM = 64
 
 
 def _quantized(col: Column) -> Column:
-    """array<float> -> array<long> micro-units, exact and portable."""
+    """array<float> -> array<long> micro-units, exact and portable.
+    Their squared L2 distances (``sq_l2(a, b, zero=0)``) are exact
+    BIGINTs: max per-dim diff ~2e6 squared = 4e12, x64 dims < 2^63."""
     return F.transform(
         col, lambda x: F.floor(x.cast("double") * F.lit(_EMB_SCALE))
         .cast("long"))
-
-
-def _sq_dist(a: Column, b: Column) -> Column:
-    """Exact integer squared L2 distance between two micro-unit
-    arrays. Max per-dim diff ~2e6 squared = 4e12, x64 dims < 2^63."""
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: (x - y) * (x - y)),
-        F.lit(0).cast("long"), lambda acc, x: acc + x)
 
 
 _SQ_DIST_SQL = ("list_sum(list_transform(generate_series(1, {d}), "
@@ -73,7 +67,7 @@ def lloyd_cte_sql(k: int, iters: int) -> str:
     ``c{iters}`` (final centroids). Shared by ml5_kmeans and
     d8_semantic_dedup so both oracles state the identical clustering
     semantics."""
-    d = _SQ_DIST_SQL.format(d=_DIM, a="v.vq", b="c.c")
+    d = _SQ_DIST_SQL.format(d=EMBEDDING_DIM, a="v.vq", b="c.c")
     sql = f"""
     WITH v AS (
         SELECT vec_id,
@@ -97,7 +91,7 @@ def lloyd_cte_sql(k: int, iters: int) -> str:
             SELECT cluster_id, i AS dim,
                    CAST(FLOOR(CAST(SUM(vq[i]) AS DOUBLE)
                               / COUNT(*)) AS BIGINT) AS cd
-            FROM a{it}, unnest(generate_series(1, {_DIM})) AS t(i)
+            FROM a{it}, unnest(generate_series(1, {EMBEDDING_DIM})) AS t(i)
             GROUP BY cluster_id, i)
         GROUP BY cluster_id
     )"""
@@ -115,7 +109,7 @@ def _kmeans_oracle() -> str:
                  CAST(SUM(d) AS BIGINT) AS ss_err
           FROM a{last} GROUP BY cluster_id) s
     JOIN c{last} c USING (cluster_id),
-         unnest(generate_series(1, {_DIM})) AS t(i)
+         unnest(generate_series(1, {EMBEDDING_DIM})) AS t(i)
     ORDER BY cluster_id, dim
     """
     return sql
@@ -162,7 +156,7 @@ def lloyd_assign(spark: SparkSession, sf_dir: str, k: int,
             F.lit(None).cast("long").alias("d"))
 
         def _better(acc, ct):
-            d = _sq_dist(F.col("vq"), ct["c"])
+            d = sq_l2(F.col("vq"), ct["c"], zero=0)
             take = acc["cid"].isNull() | (d < acc["d"])
             return F.when(take, F.struct(
                 ct["cluster_id"].alias("cid"), d.alias("d"))
@@ -230,7 +224,7 @@ def ml5_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 ml5_kmeans.__doc__ = ml5_kmeans.__doc__.format(
-    K=_KM_K, I=_KM_ITERS, D=_DIM)
+    K=_KM_K, I=_KM_ITERS, D=EMBEDDING_DIM)
 
 
 # --------------------------------------------------------------------
@@ -253,7 +247,7 @@ _KNN_ORACLE = f"""
         SELECT query_id, label FROM (
             SELECT q.query_id, c.label,
                    ROW_NUMBER() OVER (PARTITION BY q.query_id
-                       ORDER BY {_SQ_DIST_SQL.format(d=_DIM, a='q.qv',
+                       ORDER BY {_SQ_DIST_SQL.format(d=EMBEDDING_DIM, a='q.qv',
                                                      b='c.vq')},
                                 c.vec_id) AS rn
             FROM q, c) WHERE rn <= {_KNN_K}
@@ -293,7 +287,7 @@ def ml6_knn_classify(spark: SparkSession, sf_dir: str) -> DataFrame:
     c = v.filter(F.col("vec_id") >= _KNN_Q)
     scored = c.crossJoin(F.broadcast(q)).select(
         "query_id", "label", "vec_id",
-        _sq_dist(F.col("qv"), F.col("vq")).alias("d"))
+        sq_l2(F.col("qv"), F.col("vq"), zero=0).alias("d"))
     w = Window.partitionBy("query_id").orderBy(F.asc("d"), F.asc("vec_id"))
     nn = (scored.withColumn("rn", F.row_number().over(w))
           .filter(F.col("rn") <= _KNN_K))
@@ -329,7 +323,7 @@ _NB_ORACLE = f"""
         SELECT label, i AS dim, COUNT(*) AS n,
                CAST(SUM(vq[i]) AS BIGINT) AS s,
                CAST(SUM(vq[i] * vq[i]) AS BIGINT) AS qq
-        FROM c, unnest(generate_series(1, {_DIM})) AS t(i)
+        FROM c, unnest(generate_series(1, {EMBEDDING_DIM})) AS t(i)
         GROUP BY label, i
     ), packed AS (
         SELECT label, MAX(n) AS n,
@@ -344,7 +338,7 @@ _NB_ORACLE = f"""
         SELECT q.query_id, p.label,
                ROUND(ln(CAST(p.n AS DOUBLE) / total)
                      + list_sum(list_transform(
-                           generate_series(1, {_DIM}), i ->
+                           generate_series(1, {EMBEDDING_DIM}), i ->
                            -0.5 * ln(2.0 * pi()
                                      * (vrs[i] / {_EMB_SCALE}
                                         / {_EMB_SCALE}))
@@ -426,7 +420,7 @@ def ml7_gaussian_nb(spark: SparkSession, sf_dir: str) -> DataFrame:
             "query_id", "label",
             F.round(
                 F.log(F.col("n").cast("double") / F.col("total"))
-                + F.aggregate(F.sequence(F.lit(1), F.lit(_DIM)),
+                + F.aggregate(F.sequence(F.lit(1), F.lit(EMBEDDING_DIM)),
                               F.lit(0.0), _term), 6).alias("score")))
     w = Window.partitionBy("query_id").orderBy(
         F.desc("score"), F.asc("label"))
@@ -438,7 +432,7 @@ def ml7_gaussian_nb(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 ml7_gaussian_nb.__doc__ = ml7_gaussian_nb.__doc__.format(
-    Q=_KNN_Q, D=_DIM)
+    Q=_KNN_Q, D=EMBEDDING_DIM)
 
 
 # --------------------------------------------------------------------
@@ -1861,8 +1855,8 @@ _GM_ORACLE = f"""
     SELECT t1.i AS i, t2.j AS j,
            CAST(SUM(vq[t1.i] * vq[t2.j]) AS BIGINT) AS g
     FROM v,
-         unnest(generate_series(1, {_DIM})) AS t1(i),
-         unnest(generate_series(t1.i, {_DIM})) AS t2(j)
+         unnest(generate_series(1, {EMBEDDING_DIM})) AS t1(i),
+         unnest(generate_series(t1.i, {EMBEDDING_DIM})) AS t2(j)
     GROUP BY t1.i, t2.j
     ORDER BY i, j
 """
@@ -1893,11 +1887,11 @@ def gm1_gram_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
     emb = spread_if_undersplit(emb)
     v = emb.select(_quantized(F.col("embedding")).alias("vq"))
-    seq = F.sequence(F.lit(1), F.lit(_DIM))
+    seq = F.sequence(F.lit(1), F.lit(EMBEDDING_DIM))
 
     def _upper(i):
         return F.transform(
-            F.sequence(i, F.lit(_DIM)),
+            F.sequence(i, F.lit(EMBEDDING_DIM)),
             lambda j: F.struct(
                 i.alias("i"), j.alias("j"),
                 (F.element_at(F.col("vq"), i)
@@ -1912,4 +1906,4 @@ def gm1_gram_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 gm1_gram_matrix.__doc__ = gm1_gram_matrix.__doc__.format(
-    D=_DIM, T=_DIM * (_DIM + 1) // 2)
+    D=EMBEDDING_DIM, T=EMBEDDING_DIM * (EMBEDDING_DIM + 1) // 2)

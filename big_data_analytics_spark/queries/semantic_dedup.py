@@ -17,6 +17,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from big_data_analytics_spark.operators.similarity import dot
 from big_data_analytics_spark.queries import query
 from big_data_analytics_spark.queries.ml_queries import (
     lloyd_assign,
@@ -57,11 +58,6 @@ def _d8_oracle() -> str:
     """
 
 
-def _dot(a, b):
-    return F.aggregate(F.zip_with(a, b, lambda x, y: x * y),
-                       F.lit(0).cast("long"), lambda acc, x: acc + x)
-
-
 @query("d8_semantic_dedup", oracle=_d8_oracle())
 def d8_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SemDeDup-style semantic near-duplicate pairs: k-means the
@@ -83,6 +79,7 @@ def d8_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     under any partitioning."""
     assigned, _cents = lloyd_assign(spark, sf_dir, _K, _ITERS)
     wk = Window.partitionBy("cluster_id").orderBy("d", "vec_id")
+    vq = F.col("vq")
     # both sides of the pair join scan `kept`; checkpoint it so the
     # 2-iteration Lloyd lineage runs once, not once per join branch
     # (deterministic output, so materializing is semantics-free)
@@ -94,7 +91,7 @@ def d8_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
                     # the pair stage then pays a single array fold —
                     # higher-order folds are interpreted, so this is
                     # a 3x cut of the dominant cost
-                    F.sqrt(_dot(F.col("vq"), F.col("vq"))
+                    F.sqrt(dot(vq, vq, zero=0)
                            .cast("double")).alias("nrm"))
             .localCheckpoint())
     x = kept.select(F.col("cluster_id"), F.col("vec_id").alias("id_a"),
@@ -110,7 +107,7 @@ def d8_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
              .filter(F.col("id_a") < F.col("id_b"))
              .repartition(F.col("id_a"), F.col("id_b")))
     cosine = F.round(
-        _dot(F.col("va"), F.col("vb")).cast("double")
+        dot(F.col("va"), F.col("vb"), zero=0).cast("double")
         / (F.col("na") * F.col("nb")), 6)
     return (pairs.select("cluster_id", "id_a", "id_b",
                          cosine.alias("cosine"))

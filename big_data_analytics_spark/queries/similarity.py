@@ -21,21 +21,17 @@ from big_data_analytics_spark.catalog import load_table
 from big_data_analytics_spark.queries import query
 from big_data_analytics_spark.caching import session_memo
 from big_data_analytics_spark.operators.partitioning import spread_if_undersplit
+from big_data_analytics_spark.operators.similarity import (
+    EMBEDDING_DIM,
+    cosine,
+    dot,
+    l2_norm,
+    sq_l2,
+)
 
 #: vec_ids below this bound act as the "query set"; the rest are corpus.
 N_QUERY_VECS = 3
 TOP_K = 5
-
-
-def _as_double(col):
-    return F.transform(col, lambda x: x.cast("double"))
-
-
-def _dot(a, b):
-    """Sequential-fold dot product of two DOUBLE arrays."""
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda acc, x: acc + x
-    )
 
 
 # --------------------------------------------------------------------
@@ -77,22 +73,22 @@ def v1_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     every cosine BIT-IDENTICAL to the oracle's per-pair form — only
     the evaluation count changes."""
     emb = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", _as_double(F.col("embedding")).alias("v")
+        "vec_id", F.col("embedding").cast("array<double>").alias("v")
     )
     q = emb.filter(F.col("vec_id") < N_QUERY_VECS).select(
         F.col("vec_id").alias("query_id"), F.col("v").alias("qv"),
-        F.sqrt(_dot(F.col("v"), F.col("v"))).alias("qn")
+        l2_norm(F.col("v")).alias("qn")
     )
     c = emb.filter(F.col("vec_id") >= N_QUERY_VECS).select(
         F.col("vec_id").alias("neighbor_id"), F.col("v").alias("cv"),
-        F.sqrt(_dot(F.col("v"), F.col("v"))).alias("cn")
+        l2_norm(F.col("v")).alias("cn")
     )
     scored = (
         c.crossJoin(F.broadcast(q))
         .select(
             "query_id", "neighbor_id",
             F.round(
-                _dot(F.col("qv"), F.col("cv"))
+                dot(F.col("qv"), F.col("cv"))
                 / (F.col("qn") * F.col("cn")),
                 6,
             ).alias("cosine"),
@@ -131,7 +127,8 @@ def v2_label_centroid_norms(spark: SparkSession, sf_dir: str) -> DataFrame:
     partial is a scalar sum, so it scales like any hash aggregate."""
     emb = load_table(spark, sf_dir, "embeddings")
     exploded = emb.select(
-        "label", F.posexplode(_as_double(F.col("embedding"))).alias("dim", "x")
+        "label",
+        F.posexplode(F.col("embedding").cast("array<double>")).alias("dim", "x")
     )
     per_dim = exploded.groupBy("label", "dim").agg(
         F.sum("x").alias("s"), F.count(F.lit(1)).alias("n_dim")
@@ -168,15 +165,15 @@ _IVF_COS = (
 def _cos6(a, b, na, nb):
     """Cosine from precomputed norms, rounded to 6 dp (engine-portable
     ranking key)."""
-    return F.round(_dot(a, b) / (na * nb), 6)
+    return F.round(dot(a, b) / (na * nb), 6)
 
 
 def _ivf_inputs(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
     """(vectors with their norms, centroid cells) for the IVF index."""
     emb = load_table(spark, sf_dir, "embeddings").select(
         "vec_id",
-        _as_double(F.col("embedding")).alias("v"),
-    ).withColumn("vn", F.sqrt(_dot(F.col("v"), F.col("v"))))
+        F.col("embedding").cast("array<double>").alias("v"),
+    ).withColumn("vn", l2_norm(F.col("v")))
     cent = emb.filter(F.col("vec_id") % CELL_STRIDE == CELL_PHASE).select(
         F.col("vec_id").alias("cell_id"), F.col("v").alias("cv"),
         F.col("vn").alias("cn"),
@@ -329,7 +326,6 @@ def v3_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 # quantize → approx-rank → rerank pipeline is oracle-checkable.
 # --------------------------------------------------------------------
 
-_DIM = 64
 SQ_CAND = 25
 
 _SQ_ORACLE = f"""
@@ -341,14 +337,14 @@ _SQ_ORACLE = f"""
         FROM embeddings WHERE vec_id >= {N_QUERY_VECS}
     ), stats AS (
         SELECT i, MIN(v[i]) AS mn, MAX(v[i]) AS mx
-        FROM c, unnest(generate_series(1, {_DIM})) AS t(i)
+        FROM c, unnest(generate_series(1, {EMBEDDING_DIM})) AS t(i)
         GROUP BY i
     ), packed AS (
         SELECT list(mn ORDER BY i) AS mns, list(mx ORDER BY i) AS mxs
         FROM stats
     ), coded AS (
         SELECT c.vec_id, c.v,
-               list_transform(generate_series(1, {_DIM}), i ->
+               list_transform(generate_series(1, {EMBEDDING_DIM}), i ->
                    mns[i] + (CASE WHEN mxs[i] = mns[i] THEN 0.0
                              ELSE least(255.0, greatest(0.0,
                                   floor((v[i] - mns[i])
@@ -395,17 +391,17 @@ def v5_sq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     collect_list into two arrays on a single row → broadcast cross
     join) — no driver collect, unlike a trained k-means codebook. At
     100 TB: the stats pass is one map-side-combinable aggregate with
-    {_DIM} groups; codes are 16× smaller than the raw vectors, so the
-    scan side of every probe shrinks by that factor; reconstruction
+    {EMBEDDING_DIM} groups; codes are 16× smaller than the raw vectors,
+    so the scan side of every probe shrinks by that factor; reconstruction
     is a per-row expression, never a shuffle. Complements v3 (IVF
     prunes WHICH vectors are scored; SQ shrinks the COST of scoring
     each one — production engines stack them)."""
     emb = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", _as_double(F.col("embedding")).alias("v"))
+        "vec_id", F.col("embedding").cast("array<double>").alias("v"))
     corpus = emb.filter(F.col("vec_id") >= N_QUERY_VECS)
     q = emb.filter(F.col("vec_id") < N_QUERY_VECS).select(
         F.col("vec_id").alias("query_id"), F.col("v").alias("qv")
-    ).withColumn("qn", F.sqrt(_dot(F.col("qv"), F.col("qv"))))
+    ).withColumn("qn", l2_norm(F.col("qv")))
 
     stats = (corpus.select(F.posexplode("v").alias("dim", "x"))
              .groupBy("dim")
@@ -433,8 +429,8 @@ def v5_sq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "query_id", F.col("vec_id").alias("neighbor_id"), "v", "qv", "qn",
             F.round(
-                _dot(F.col("qv"), F.col("rv"))
-                / (F.col("qn") * F.sqrt(_dot(F.col("rv"), F.col("rv")))),
+                dot(F.col("qv"), F.col("rv"))
+                / (F.col("qn") * l2_norm(F.col("rv"))),
                 6).alias("ascore"),
         )
     )
@@ -446,8 +442,8 @@ def v5_sq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact = cand.select(
         "query_id", "neighbor_id",
         F.round(
-            _dot(F.col("qv"), F.col("v"))
-            / (F.col("qn") * F.sqrt(_dot(F.col("v"), F.col("v")))),
+            dot(F.col("qv"), F.col("v"))
+            / (F.col("qn") * l2_norm(F.col("v"))),
             6).alias("cosine"),
     )
     we = Window.partitionBy("query_id").orderBy(
@@ -544,14 +540,6 @@ _PQ_ORACLE = f"""
 """
 
 
-def _l2_6(a, b):
-    """Sequential-fold squared L2 distance, rounded to 6 dp (the
-    engine-portable argmin/ranking key)."""
-    return F.round(
-        F.aggregate(F.zip_with(a, b, lambda x, y: (x - y) * (x - y)),
-                    F.lit(0.0), lambda acc, x: acc + x), 6)
-
-
 @query("v6_pq_adc_topk", oracle=_PQ_ORACLE)
 def v6_pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PQ ANN with asymmetric-distance scoring, driver-graded: 64-dim
@@ -573,7 +561,7 @@ def v6_pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     cells) and v5 (shrink scans) this completes the production
     IVF/SQ/PQ toolkit, every layer hash-graded."""
     emb = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", _as_double(F.col("embedding")).alias("v"))
+        "vec_id", F.col("embedding").cast("array<double>").alias("v"))
     corpus = emb.filter(F.col("vec_id") >= N_QUERY_VECS)
     q = emb.filter(F.col("vec_id") < N_QUERY_VECS).select(
         F.col("vec_id").alias("query_id"), F.col("v").alias("qv"))
@@ -591,18 +579,19 @@ def v6_pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     cbsub = subspaces(cb, ["j"], F.col("v")).withColumnRenamed("sub", "cbs")
     qsub = subspaces(q, ["query_id"], F.col("qv"))
 
+    # squared L2 rounded to 6 dp: the engine-portable argmin/ranking key
+    sub_d2 = F.round(sq_l2(F.col("sub"), F.col("cbs")), 6)
     # encode: nearest codeword per (vector, subspace) — map-side
     # min_by against the broadcast codebook, ties to the lowest j
     enc = (csub.join(F.broadcast(cbsub), "s")
            .groupBy("vec_id", "s")
            .agg(F.min_by(
                F.col("j"),
-               F.struct(_l2_6(F.col("sub"), F.col("cbs")).alias("d"),
-                        F.col("j"))).alias("code")))
+               F.struct(sub_d2.alias("d"), F.col("j"))).alias("code")))
     # per-query distance tables (M_SUB × K_CODE rows per query)
     dtab = (qsub.join(F.broadcast(cbsub), "s")
             .select("query_id", "s", "j",
-                    _l2_6(F.col("sub"), F.col("cbs")).alias("dq")))
+                    sub_d2.alias("dq")))
     adist = (enc.join(F.broadcast(dtab),
                       (enc.s == dtab.s) & (enc.code == dtab.j))
              .groupBy("query_id", "vec_id")
@@ -616,11 +605,8 @@ def v6_pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
              .join(corpus.withColumnRenamed("vec_id", "neighbor_id"),
                    "neighbor_id")
              .select("query_id", "neighbor_id",
-                     F.round(
-                         _dot(F.col("qv"), F.col("v"))
-                         / (F.sqrt(_dot(F.col("qv"), F.col("qv")))
-                            * F.sqrt(_dot(F.col("v"), F.col("v")))),
-                         6).alias("cosine")))
+                     F.round(cosine(F.col("qv"), F.col("v")), 6)
+                     .alias("cosine")))
     we = Window.partitionBy("query_id").orderBy(
         F.desc("cosine"), F.asc("neighbor_id"))
     return (exact.withColumn("rn", F.row_number().over(we))
@@ -687,30 +673,30 @@ def v9_kcenter_coreset(spark: SparkSession, sf_dir: str) -> DataFrame:
     parallel passes at 100 TB, the standard distributed k-center
     schedule. k² driver work is nil for curation-sized k."""
     emb = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", _as_double(F.col("embedding")).alias("v"))
+        "vec_id", F.col("embedding").cast("array<double>").alias("v"))
     seed = emb.orderBy(F.asc("vec_id")).limit(1).collect()[0]
     sel = [(0, int(seed.vec_id), None)]
-    vecs = [list(seed.v)]
+    v = F.col("v")
+    vv = dot(v, v)
 
-    def _lit_vec(cv):
-        return F.array(*[F.lit(float(x)) for x in cv])
+    def _dist(cv):
+        c_norm = 0.0
+        for x in cv:  # same left-to-right fold as the engines
+            c_norm += float(x) * float(x)
+        lit_vec = F.array(*[F.lit(float(x)) for x in cv])
+        return F.round(vv - 2.0 * dot(v, lit_vec) + F.lit(c_norm), 6)
 
+    # each center's distance Column is built once and reused by every
+    # later round: its literal vector and fold cost ~100 py4j calls
+    cv, dists = seed.v, []
     for k in range(1, _KC_K):
-        dists = []
-        for cv in vecs:
-            c_norm = 0.0
-            for x in cv:  # same left-to-right fold as the engines
-                c_norm += float(x) * float(x)
-            dists.append(F.round(
-                _dot(F.col("v"), F.col("v"))
-                - 2.0 * _dot(F.col("v"), _lit_vec(cv))
-                + F.lit(c_norm), 6))
+        dists.append(_dist(cv))
         md = dists[0] if len(dists) == 1 else F.least(*dists)
         top = (emb.select("vec_id", "v", md.alias("md"))
                .orderBy(F.desc("md"), F.asc("vec_id"))
                .limit(1).collect()[0])
         sel.append((k, int(top.vec_id), float(top.md)))
-        vecs.append(list(top.v))
+        cv = top.v
     return spark.createDataFrame(
         sel, "sel_round long, vec_id long, sel_dist double")
 
@@ -785,15 +771,15 @@ def v10_two_stage_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     this query cuts the PER-CANDIDATE cost — at 100 TB you compose
     the two (IVF probe -> truncated score -> exact rerank)."""
     emb = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", _as_double(F.col("embedding")).alias("v"))
+        "vec_id", F.col("embedding").cast("array<double>").alias("v"))
     q = emb.filter(F.col("vec_id") < N_QUERY_VECS).select(
         F.col("vec_id").alias("query_id"), F.col("v").alias("qv"))
     c = emb.filter(F.col("vec_id") >= N_QUERY_VECS).select(
         F.col("vec_id").alias("neighbor_id"), F.col("v").alias("cv"))
     stage1 = (c.crossJoin(F.broadcast(q))
               .select("query_id", "neighbor_id", "qv", "cv",
-                      F.round(_dot(F.slice("qv", 1, _TRUNC_D),
-                                   F.slice("cv", 1, _TRUNC_D)), 6)
+                      F.round(dot(F.slice("qv", 1, _TRUNC_D),
+                                  F.slice("cv", 1, _TRUNC_D)), 6)
                       .alias("tdot")))
     wc = Window.partitionBy("query_id").orderBy(
         F.desc("tdot"), F.asc("neighbor_id"))
@@ -801,10 +787,7 @@ def v10_two_stage_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
             .filter(F.col("crn") <= _CAND_C))
     rer = cand.select(
         "query_id", "neighbor_id",
-        F.round(_dot(F.col("qv"), F.col("cv"))
-                / (F.sqrt(_dot(F.col("qv"), F.col("qv")))
-                   * F.sqrt(_dot(F.col("cv"), F.col("cv")))), 6)
-        .alias("cosine"))
+        F.round(cosine(F.col("qv"), F.col("cv")), 6).alias("cosine"))
     wr = Window.partitionBy("query_id").orderBy(
         F.desc("cosine"), F.asc("neighbor_id"))
     return (rer.withColumn("rk", F.row_number().over(wr))
@@ -920,7 +903,7 @@ def v11_mmr_diversified(spark: SparkSession, sf_dir: str) -> DataFrame:
     scoring pass + k constant-cost rounds, embarrassingly parallel
     across queries."""
     emb = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", _as_double(F.col("embedding")).alias("v"))
+        "vec_id", F.col("embedding").cast("array<double>").alias("v"))
     q = emb.filter(F.col("vec_id") < N_QUERY_VECS).select(
         F.col("vec_id").alias("query_id"), F.col("v").alias("qv"))
     c = emb.filter(F.col("vec_id") >= N_QUERY_VECS).select(
@@ -931,10 +914,7 @@ def v11_mmr_diversified(spark: SparkSession, sf_dir: str) -> DataFrame:
     c = spread_if_undersplit(c)
 
     def cos(a, b):
-        return F.round(
-            _dot(F.col(a), F.col(b))
-            / (F.sqrt(_dot(F.col(a), F.col(a)))
-               * F.sqrt(_dot(F.col(b), F.col(b)))), 6)
+        return F.round(cosine(F.col(a), F.col(b)), 6)
 
     w_rel = Window.partitionBy("query_id").orderBy(
         F.desc("rel"), F.asc("neighbor_id"))

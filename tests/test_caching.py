@@ -187,3 +187,33 @@ def test_warm_rerun_compiles_no_generated_code(spark):
 
     first = compiles_of_one_run()
     assert compiles_of_one_run() == 0, f"first run compiled {first}"
+
+
+def test_components_rerun_compiles_no_generated_code(spark):
+    """The components loops probe convergence with ``isEmpty()``. A
+    ``.limit(1).count()`` probe names its limit counter
+    ``_limit_counter_<n>`` from a JVM-wide sequence, so every call
+    compiled new classes whatever the cache size (cc1, cc2).
+
+    Adaptive execution is off for the two calls: on this toy input it
+    picks the broadcast side of the label join by whichever shuffle
+    stage finishes first, a race that compiles a second plan variant
+    once per JVM, which is not what this guard is about."""
+    from big_data_analytics_spark.operators.graph import connected_components
+
+    edges = spark.createDataFrame(
+        [(1, 2), (2, 3), (3, 4), (7, 8), (8, 9)], "id_a long, id_b long")
+
+    def compiles_of_one_call():
+        c0 = session.codegen_compiles(spark)
+        connected_components(edges).collect()
+        return session.codegen_compiles(spark) - c0
+
+    key = "spark.sql.adaptive.enabled"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "false")
+    try:
+        first = compiles_of_one_call()
+        assert compiles_of_one_call() == 0, f"first call compiled {first}"
+    finally:
+        spark.conf.set(key, old)

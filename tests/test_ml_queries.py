@@ -5,7 +5,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from big_data_analytics_spark.catalog import load_table
-from big_data_analytics_spark.queries.ml_queries import _DIM
+from big_data_analytics_spark.operators.similarity import EMBEDDING_DIM as _DIM
 from tests.conftest import SF_SMOKE
 
 

@@ -18,8 +18,8 @@ nothing. Imports and ``__dunder__`` names are exempt (re-exports and
 Helpers get the same guard: a top-level ``def``/``class`` name bound
 twice, or bound by both a ``def`` and a plain assignment, fails. A
 rebound helper silently changes every earlier query that calls it —
-e.g. ``similarity._dot`` (double fold) and ``semantic_dedup._dot``
-(long fold) would clash if their modules were merged.
+e.g. two ``_dot`` helpers, one folding into a DOUBLE and one into a
+BIGINT, would clash if their modules were merged.
 """
 
 from __future__ import annotations

@@ -8,8 +8,10 @@ from pyspark.sql import functions as F
 from big_data_analytics_spark.catalog import load_table
 from big_data_analytics_spark.operators.similarity import (
     cosine_topk,
+    dot,
     embedding_near_dup_pairs,
     lsh_topk,
+    sq_l2,
 )
 from tests.conftest import SF_CORRECT
 
@@ -238,3 +240,57 @@ def test_sq_topk_recall_vs_brute_force(spark):
     assert len(truth) > 0
     recall = len(truth & got) / len(truth)
     assert recall >= 0.8, recall
+
+
+def test_vector_folds_add_left_to_right_and_reject_ragged_pairs(spark):
+    """``dot`` and ``sq_l2`` equal a pure-Python left-to-right fold,
+    bit for bit, on double and on BIGINT arrays. A pair of different
+    lengths raises (``zip_with`` alone pads with NULL and returns
+    NULL); a NULL array still yields NULL."""
+    import random
+
+    from pyspark.errors import PySparkException
+
+    rnd = random.Random(11)
+    rows = []
+    for n in (1, 3, 64):
+        a = [rnd.uniform(-1, 1) for _ in range(n)]
+        b = [rnd.uniform(-1, 1) for _ in range(n)]
+        ia = [rnd.randrange(-2_000_000, 2_000_000) for _ in range(n)]
+        ib = [rnd.randrange(-2_000_000, 2_000_000) for _ in range(n)]
+        rows.append((a, b, ia, ib))
+    df = spark.createDataFrame(
+        rows, "a array<double>, b array<double>, ia array<long>, "
+              "ib array<long>")
+    a_col = F.col("a")  # one Column object: the self-pair path
+    got = df.select(
+        dot(a_col, a_col).alias("aa"),
+        dot(F.col("a"), F.col("b")).alias("d"),
+        sq_l2(F.col("a"), F.col("b")).alias("s"),
+        dot(F.col("ia"), F.col("ib"), zero=0).alias("di"),
+        sq_l2(F.col("ia"), F.col("ib"), zero=0).alias("si"),
+    ).collect()
+
+    def fold(xs, ys, term, acc):
+        for x, y in zip(xs, ys):
+            acc = acc + term(x, y)
+        return acc
+
+    for (a, b, ia, ib), r in zip(rows, got):
+        assert r["aa"] == fold(a, a, lambda x, y: x * y, 0.0)
+        assert r["d"] == fold(a, b, lambda x, y: x * y, 0.0)
+        assert r["s"] == fold(a, b, lambda x, y: (x - y) * (x - y), 0.0)
+        assert r["di"] == fold(ia, ib, lambda x, y: x * y, 0)
+        assert r["si"] == fold(ia, ib, lambda x, y: (x - y) * (x - y), 0)
+
+    ragged = spark.createDataFrame(
+        [([1.0, 2.0, 3.0], [1.0, 2.0])], "a array<double>, b array<double>")
+    for f in (dot, sq_l2):
+        with pytest.raises(PySparkException, match="vector length mismatch"):
+            ragged.select(f(F.col("a"), F.col("b"))).collect()
+
+    nulls = spark.createDataFrame(
+        [(None, [1.0, 2.0])], "a array<double>, b array<double>")
+    assert nulls.select(dot(F.col("a"), F.col("b")).alias("d"),
+                        sq_l2(F.col("b"), F.col("a")).alias("s")
+                        ).first().asDict() == {"d": None, "s": None}
