@@ -79,7 +79,6 @@ def d8_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     under any partitioning."""
     assigned, _cents = lloyd_assign(spark, sf_dir, _K, _ITERS)
     wk = Window.partitionBy("cluster_id").orderBy("d", "vec_id")
-    vq = F.col("vq")
     # both sides of the pair join scan `kept`; checkpoint it so the
     # 2-iteration Lloyd lineage runs once, not once per join branch
     # (deterministic output, so materializing is semantics-free)
@@ -91,7 +90,7 @@ def d8_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
                     # the pair stage then pays a single array fold —
                     # higher-order folds are interpreted, so this is
                     # a 3x cut of the dominant cost
-                    F.sqrt(dot(vq, vq, zero=0)
+                    F.sqrt(dot(F.col("vq"), F.col("vq"), zero=0)
                            .cast("double")).alias("nrm"))
             .localCheckpoint())
     x = kept.select(F.col("cluster_id"), F.col("vec_id").alias("id_a"),

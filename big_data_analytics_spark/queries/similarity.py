@@ -676,15 +676,14 @@ def v9_kcenter_coreset(spark: SparkSession, sf_dir: str) -> DataFrame:
         "vec_id", F.col("embedding").cast("array<double>").alias("v"))
     seed = emb.orderBy(F.asc("vec_id")).limit(1).collect()[0]
     sel = [(0, int(seed.vec_id), None)]
-    v = F.col("v")
-    vv = dot(v, v)
+    vv = dot(F.col("v"), F.col("v"))
 
     def _dist(cv):
         c_norm = 0.0
         for x in cv:  # same left-to-right fold as the engines
             c_norm += float(x) * float(x)
         lit_vec = F.array(*[F.lit(float(x)) for x in cv])
-        return F.round(vv - 2.0 * dot(v, lit_vec) + F.lit(c_norm), 6)
+        return F.round(vv - 2.0 * dot(F.col("v"), lit_vec) + F.lit(c_norm), 6)
 
     # each center's distance Column is built once and reused by every
     # later round: its literal vector and fold cost ~100 py4j calls

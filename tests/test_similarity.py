@@ -262,9 +262,8 @@ def test_vector_folds_add_left_to_right_and_reject_ragged_pairs(spark):
     df = spark.createDataFrame(
         rows, "a array<double>, b array<double>, ia array<long>, "
               "ib array<long>")
-    a_col = F.col("a")  # one Column object: the self-pair path
     got = df.select(
-        dot(a_col, a_col).alias("aa"),
+        dot(F.col("a"), F.col("a")).alias("aa"),
         dot(F.col("a"), F.col("b")).alias("d"),
         sq_l2(F.col("a"), F.col("b")).alias("s"),
         dot(F.col("ia"), F.col("ib"), zero=0).alias("di"),
